@@ -6610,6 +6610,7 @@ def q_streaming_join_view_maintain(spark: SparkSession, sf_dir: str) -> DataFram
     from ..streaming.pipeline import (
         foreach_batch_join_view_maintain,
         read_join_view_segments,
+        seed_join_view_segments,
         stream_source,
     )
     from .registry import _fresh_copy_of
@@ -6628,9 +6629,9 @@ def q_streaming_join_view_maintain(spark: SparkSession, sf_dir: str) -> DataFram
 
     if sf_dir not in _JV_SEG_SEED:
         seed = tempfile.mkdtemp(prefix="stream_jv_seed_") + "/view"
-        piece(
-            orders.filter(F.col("o_orderdate") < cutoff), customer
-        ).write.parquet(f"{seed}/segs/seg_base")
+        seed_join_view_segments(
+            piece(orders.filter(F.col("o_orderdate") < cutoff), customer), seed
+        )
         _JV_SEG_SEED[sf_dir] = seed
     view_dir = _fresh_copy_of(_JV_SEG_SEED[sf_dir], "stream_jv_")
     schema = spark.read.parquet(table_path(sf_dir, "orders")).schema
@@ -6699,6 +6700,7 @@ def q_join_view_read_at(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import (
         foreach_batch_join_view_maintain,
         read_join_view_segments_at,
+        seed_join_view_segments,
     )
 
     orders, customer = _t(spark, sf_dir, "orders", "customer")
@@ -6707,14 +6709,17 @@ def q_join_view_read_at(spark: SparkSession, sf_dir: str) -> DataFrame:
         import tempfile
 
         view_dir = tempfile.mkdtemp(prefix="jv_tt_") + "/view"
-        orders.filter(F.col("o_orderdate") < cutoff).join(
-            customer, orders["o_custkey"] == customer["c_custkey"]
-        ).select(
-            "o_orderkey",
-            "o_custkey",
-            "c_mktsegment",
-            F.col("o_totalprice").cast("double").alias("total_price"),
-        ).write.parquet(f"{view_dir}/segs/seg_base")
+        seed_join_view_segments(
+            orders.filter(F.col("o_orderdate") < cutoff)
+            .join(customer, orders["o_custkey"] == customer["c_custkey"])
+            .select(
+                "o_orderkey",
+                "o_custkey",
+                "c_mktsegment",
+                F.col("o_totalprice").cast("double").alias("total_price"),
+            ),
+            view_dir,
+        )
         sink = foreach_batch_join_view_maintain(
             view_dir,
             table_path(sf_dir, "customer"),

@@ -26,6 +26,7 @@ from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
     _install,
     _last_applied_epoch,
     _store_path,
+    _write_ledger,
     foreach_batch_histogram_maintain,
     foreach_batch_upsert,
 )
@@ -190,9 +191,7 @@ def test_ledger_parked_mid_install_still_reports_epoch(spark, tmp_path):
     replayed epoch through."""
     target = str(tmp_path / "store")
     os.makedirs(target)
-    spark.range(1).selectExpr("CAST(4 AS BIGINT) AS max_applied_epoch").coalesce(
-        1
-    ).write.parquet(target + "/_ledger")
+    _write_ledger(spark, target, 4)
     shutil.move(target + "/_ledger", target + "/_ledger__prev")
     assert _last_applied_epoch(spark, target) == 4
 

@@ -546,6 +546,7 @@ def test_join_view_maintain_equals_recompute_and_replays(spark, tmp_path):
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         foreach_batch_join_view_maintain,
         read_join_view_segments,
+        seed_join_view_segments,
     )
 
     dim_path = str(tmp_path / "dim")
@@ -555,9 +556,10 @@ def test_join_view_maintain_equals_recompute_and_replays(spark, tmp_path):
     view_dir = str(tmp_path / "view")
     facts = lambda rows: spark.createDataFrame(rows, "fid long, k long")  # noqa: E731
     # seed: the standing view over the first fact slice
-    spark.createDataFrame(
-        [(10, 1, "a")], "fid long, k long, attr string"
-    ).write.parquet(f"{view_dir}/segs/seg_base")
+    seed_join_view_segments(
+        spark.createDataFrame([(10, 1, "a")], "fid long, k long, attr string"),
+        view_dir,
+    )
     sink = foreach_batch_join_view_maintain(
         view_dir, dim_path, fact_key="k", dim_key="k", dim_cols=["attr"]
     )
@@ -780,33 +782,55 @@ def test_bloom_probe_localizes_suspects_and_scales(spark, tmp_path):
     assert base_bytes <= 2 * (20_000 * _SEG_BLOOM_BITS_PER_KEY // 8) + 10_000
 
 
-@pytest.mark.slow
-def test_legacy_segment_without_bloom_falls_back_to_exact(spark, tmp_path):
-    """A store seeded before the bitmap existed: the probe reports
-    cannot-localize (None) and the maintainer runs the exact union
-    semi-join — same correctness, pre-fix cost. Compaction then UPGRADES
-    the store."""
-    import shutil as _sh
+def _frames_snap(p, l, s):
+    return (
+        sorted(tuple(r) for r in p.collect()),
+        sorted(tuple(r) for r in l.collect()),
+        [tuple(r) for r in s.collect()],
+    )
 
+
+def _build_sidecar_store(spark, idx):
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
-        _bloom_suspect_segments,
-        compact_bm25_segments,
         foreach_batch_bm25_maintain_segmented,
         seed_bm25_index_segmented,
     )
 
-    idx = str(tmp_path / "segidx")
-    seed_bm25_index_segmented(_docs(spark, [(1, "legacy doc")]), idx)
-    _sh.rmtree(f"{idx}/segs/seg_base/idbloom")  # simulate a legacy store
-    fresh = spark.range(100, 102).select(F.col("id").alias("doc_id"))
-    assert _bloom_suspect_segments(spark, f"{idx}/segs", fresh, "doc_id") is None
+    seed_bm25_index_segmented(
+        _docs(spark, [(1, "spark shuffles data"), (2, "data moves in shuffles")]),
+        idx,
+    )
     sink = foreach_batch_bm25_maintain_segmented(idx)
-    sink(_docs(spark, [(2, "new doc")]), 0)  # exact fallback path, applies
-    with pytest.raises(ValueError, match="already indexed"):
-        sink(_docs(spark, [(1, "legacy id reused")]), 1)
-    assert compact_bm25_segments(spark, idx) == 1
-    assert os.path.exists(f"{idx}/segs/seg_base/idbloom")  # upgraded
-    assert _bloom_suspect_segments(spark, f"{idx}/segs", fresh, "doc_id") == []
+    sink(_docs(spark, [(3, "broadcast joins move no data")]), 0)
+    sink(_docs(spark, [(4, "sorted postings skip row groups")]), 1)
+
+
+def test_sidecar_stats_equal_union_aggregate(spark, tmp_path):
+    from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+        read_bm25_index_segmented,
+    )
+
+    idx = str(tmp_path / "idx")
+    _build_sidecar_store(spark, idx)
+    _, doclens, stats = read_bm25_index_segmented(spark, idx)
+    agg = doclens.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.expr("sum(len) div count(1)").cast("bigint").alias("avgl"),
+    )
+    assert [tuple(r) for r in stats.collect()] == [tuple(r) for r in agg.collect()]
+    # serve == monolithic rebuild, the segmented contract
+    docs = _docs(
+        spark,
+        [
+            (1, "spark shuffles data"),
+            (2, "data moves in shuffles"),
+            (3, "broadcast joins move no data"),
+            (4, "sorted postings skip row groups"),
+        ],
+    )
+    assert _frames_snap(*read_bm25_index_segmented(spark, idx)) == _frames_snap(
+        *bm25_index_build(docs)
+    )
 
 
 def test_bucketed_cdc_all_null_event_time_batch_is_noop(spark, tmp_path):
@@ -854,6 +878,7 @@ def test_ivf_pq_retrain_recovers_recall_and_preserves_membership(spark, tmp_path
         foreach_batch_ivf_pq_maintain_segmented,
         ivf_pq_index_retrain,
         read_ivf_pq_index_segmented,
+        read_ivf_pq_index_segmented_at,
         seed_ivf_pq_index_segmented,
     )
 
@@ -900,6 +925,13 @@ def test_ivf_pq_retrain_recovers_recall_and_preserves_membership(spark, tmp_path
     # fresh epochs still apply against the retrained quantizer
     sink(_emb(spark, 300, 310), 1)
     assert len(members()) == len(pre) + 10
+    # as-of reads: the retrained seg_base carries the absorbed segments'
+    # coverage (epochs -1 and 0), so read_at(0) is exactly the retrained
+    # corpus and a cut inside the fold raises
+    at0 = read_ivf_pq_index_segmented_at(spark, idx, 0)["lists"]
+    assert sorted(r[0] for r in at0.select("vec_id").collect()) == pre
+    with pytest.raises(ValueError, match="time-travel horizon"):
+        read_ivf_pq_index_segmented_at(spark, idx, -1)
 
 
 @pytest.mark.slow

@@ -125,35 +125,6 @@ def test_bm25_read_at_after_full_merge(spark, tmp_path):
             read_bm25_index_segmented_at(spark, idx, folded)
 
 
-@pytest.mark.slow
-def test_legacy_store_without_sidecars_serves_at_top_only(spark, tmp_path):
-    """A pre-covers store (no sidecars anywhere) keeps the conservative
-    contract: read_at at/above every fold's top INCLUDES the folds
-    (unknown-min coverage must not be excluded by the range walk's
-    strict lower bound), and anything below the top raises."""
-    import shutil
-
-    idx = str(tmp_path / "idx")
-    seed_bm25_index_segmented(_docs(spark, [(1, "alpha data")]), idx)
-    sink = foreach_batch_bm25_maintain_segmented(idx)
-    sink(_docs(spark, [(2, "beta data")]), 0)
-    sink(_docs(spark, [(3, "gamma data")]), 1)
-    assert compact_bm25_segments(spark, idx) == 2  # all -> seg_base
-    sink(_docs(spark, [(4, "delta data")]), 2)
-    # simulate a legacy store: drop every _covers sidecar
-    for seg in ("seg_base", "seg_2"):
-        shutil.rmtree(f"{idx}/segs/{seg}/_covers", ignore_errors=True)
-    # at/above the fold's top (== the compaction marker, 1): servable —
-    # the unknown-min fold must not be excluded by the walk's lower bound
-    _, doclens, _ = read_bm25_index_segmented_at(spark, idx, 2)
-    assert sorted(r["doc_id"] for r in doclens.collect()) == [1, 2, 3, 4]
-    _, doclens1, _ = read_bm25_index_segmented_at(spark, idx, 1)
-    assert sorted(r["doc_id"] for r in doclens1.collect()) == [1, 2, 3]
-    # below the fold's top: refuse (coverage unknowable)
-    with pytest.raises(ValueError, match="time-travel horizon"):
-        read_bm25_index_segmented_at(spark, idx, 0)
-
-
 def test_join_view_read_at(spark, tmp_path):
     dim = spark.createDataFrame(
         [(1, "rock"), (2, "jazz")], "genre_id bigint, genre string"
