@@ -4,7 +4,8 @@ Re-expresses the reference's schema/quality checker (reference:
 dags/etl/schema_check.py) Spark-first. The reference runs one pandas pass per
 rule (nulls, dups, ranges, whitelist — :95-224); here the whole rule registry
 for a table compiles into ONE aggregate plan, so a 100 TB table is scanned
-once regardless of rule count.
+once regardless of rule count. `validate_datasets` evaluates its tables
+concurrently, so their scans share the executors instead of queueing.
 
 Rule semantics preserved (schema_check.py:77-127, 258-329):
   - required column absent            → ERROR   (V1)
@@ -26,10 +27,13 @@ summary stats.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 
 @dataclass
@@ -230,12 +234,15 @@ def validate_datasets(
     extra_errors: dict[str, list[str]] | None = None,
 ) -> dict:
     """Validate several tables (the reference's validate_datasets task,
-    schema_check.py:258-329): aggregate report; errors abort when asked."""
+    schema_check.py:258-329): aggregate report; errors abort when asked.
+
+    Tables are evaluated concurrently (session.run_concurrently); the report
+    keeps the input order, and nothing raises until every table is done."""
     extra_errors = extra_errors or {}
-    reports = {
-        name: evaluate(df, rules, name, extra_errors.get(name))
+    reports = dict(zip(named, run_concurrently([
+        partial(evaluate, df, rules, name, extra_errors.get(name))
         for name, (df, rules) in named.items()
-    }
+    ])))
     overall = {"datasets": reports, "passed": all(r["passed"] for r in reports.values())}
     if raise_on_error and not overall["passed"]:
         failed = [n for n, r in reports.items() if not r["passed"]]

@@ -1,4 +1,4 @@
-"""The reference's full ETL pipeline as one lazy Spark job.
+"""The reference's full ETL pipeline, one batch per `run_pipeline` call.
 
 Reference topology (dags/etl_streaming_pipeline.py:152):
     extract_metadata >> extract_streaming >> validate_data >>
@@ -6,11 +6,17 @@ Reference topology (dags/etl_streaming_pipeline.py:152):
 with S3 CSV files as the inter-task dataflow (each task a separate worker
 process re-reading staged files).
 
-Here each stage is a DataFrame→DataFrame function and the whole pipeline is
-ONE logical plan: stage boundaries exist only where shuffles require them,
-not where the reference wrote files. Catalyst prunes the unused dimension
-columns the reference drags through its joins (kpi_processor.py:59) and
-pushes validation aggregates into the same scans.
+Here each stage is a DataFrame→DataFrame function, and a batch reads and
+cleans each input once: the three cleaned inputs (users, songs, deduplicated
+streams) are persisted right after extraction, the validation actions fill
+that cache, and the star join and both KPI sinks read from it — so no file
+is re-scanned and no dedup is recomputed per action. Actions that do not
+depend on each other run concurrently (session.run_concurrently): the three
+tables' validation aggregates, then the two KPI writes. Validation still
+finishes, and raises, before any KPI file is written. The CSV header checks
+(V12) run on the driver without a Spark job. Catalyst prunes the unused
+dimension columns the reference drags through its joins
+(kpi_processor.py:59).
 
 Stage parity map:
   extract_metadata   → reference dags/etl/extract_metadata.py:86-151
@@ -40,6 +46,7 @@ from ..operators.relational import (
 )
 from ..operators.validation import RangeCheck, TableRules, validate_datasets
 from ..schemas import SONGS_SCHEMA, STREAMS_SCHEMA, USERS_SCHEMA, VALID_GENRES
+from ..session import run_concurrently
 from ..sources.readers import (
     missing_required_columns,
     read_csv,
@@ -113,42 +120,52 @@ def run_pipeline(
 
     Returns the result DataFrames; writes genre_kpis.csv / hourly_kpis.csv
     (single-object parity with the reference's staging contract) and
-    validation_report.json under output_dir.
+    validation_report.json under output_dir. Nothing stays persisted after
+    the call, whether it returns or raises; the returned frames recompute
+    from the sources when used.
     """
     users, songs = extract_metadata(spark, users_path, songs_path)
     streams = extract_streams(spark, stream_paths)
+    cleaned = (users, songs, streams)
+    for df in cleaned:
+        df.persist()
+    try:
+        if validate:
+            # Source-level header checks (V12): explicit schemas map CSV
+            # columns positionally, so structural absence must be caught at
+            # the header.
+            header_errors = {
+                name: [
+                    f"{path}: missing required column(s) {cols}"
+                    for path, cols in missing_required_columns(
+                        spark, paths, rules.required_columns
+                    ).items()
+                ]
+                for name, paths, rules in [
+                    ("users", users_path, USER_RULES),
+                    ("songs", songs_path, SONG_RULES),
+                    ("streams", stream_paths, STREAM_RULES),
+                ]
+            }
+            report = validate_datasets(
+                {
+                    "users": (users, USER_RULES),
+                    "songs": (songs, SONG_RULES),
+                    "streams": (streams, STREAM_RULES),
+                },
+                raise_on_error=True,
+                extra_errors=header_errors,
+            )
+            write_json_report(report, f"{output_dir}/validation_report.json")
 
-    if validate:
-        # Source-level header checks (V12): explicit schemas map CSV columns
-        # positionally, so structural absence must be caught at the header.
-        header_errors = {
-            name: [
-                f"{path}: missing required column(s) {cols}"
-                for path, cols in missing_required_columns(
-                    spark, paths, rules.required_columns
-                ).items()
-            ]
-            for name, paths, rules in [
-                ("users", users_path, USER_RULES),
-                ("songs", songs_path, SONG_RULES),
-                ("streams", stream_paths, STREAM_RULES),
-            ]
-        }
-        report = validate_datasets(
-            {
-                "users": (users, USER_RULES),
-                "songs": (songs, SONG_RULES),
-                "streams": (streams, STREAM_RULES),
-            },
-            raise_on_error=True,
-            extra_errors=header_errors,
-        )
-        write_json_report(report, f"{output_dir}/validation_report.json")
-
-    enriched = enrich_streams(streams, songs, users)
-    genre = genre_kpis(enriched)
-    hourly = hourly_kpis(enriched)
-
-    write_csv_single(genre, f"{output_dir}/genre_kpis.csv")
-    write_csv_single(hourly, f"{output_dir}/hourly_kpis.csv")
+        enriched = enrich_streams(streams, songs, users)
+        genre = genre_kpis(enriched)
+        hourly = hourly_kpis(enriched)
+        run_concurrently([
+            lambda: write_csv_single(genre, f"{output_dir}/genre_kpis.csv"),
+            lambda: write_csv_single(hourly, f"{output_dir}/hourly_kpis.csv"),
+        ])
+    finally:
+        for df in cleaned:
+            df.unpersist()
     return {"genre_kpis": genre, "hourly_kpis": hourly, "enriched": enriched}

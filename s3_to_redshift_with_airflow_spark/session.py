@@ -18,8 +18,12 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -84,3 +88,34 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) != "true":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def run_concurrently(thunks: list[Callable[[], T]]) -> list[T]:
+    """Run each thunk on its own thread; return their results in input order.
+
+    Independent Spark actions submitted from one thread run one after
+    another, each leaving most cores idle when its stages are narrow; from
+    separate threads their jobs share the executors. The threads are
+    `InheritableThread`s, so the caller's job group, job description and
+    other local properties tag the jobs each thunk submits. Every thread is
+    joined before the first error (in input order) is re-raised, so no
+    thunk is still running when the caller sees it.
+    """
+    results: list = [None] * len(thunks)
+    errors: list[BaseException | None] = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # noqa: BLE001 — re-raised on the caller's thread
+            errors[i] = e
+
+    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(thunks))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results

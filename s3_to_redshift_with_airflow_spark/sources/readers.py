@@ -10,6 +10,8 @@ Reference behaviors re-expressed Spark-first:
     lists ≤100 objects, keeps `*.csv` with size>0, sorts lexicographically.
     Spark's file index does the listing natively (`pathGlobFilter`); zero-byte
     files contribute no rows; listing order is irrelevant under a lazy scan.
+    The V12 header check (`missing_required_columns`) lists the same files on
+    the driver and reads each one's first line there, without a Spark job.
   - S5 freshness filter by mtime (reference: extract_stream_data.py:124-150):
     `modifiedAfter` option — evaluated at the file index, so stale files are
     never opened (partition pruning at file granularity).
@@ -206,32 +208,76 @@ def read_recent_csv(
     )
 
 
+def _data_files(spark: SparkSession, path: str) -> list[str]:
+    """The data files a path names, sorted. A glob expands through
+    `globStatus` and a directory is listed recursively; `_`/`.`-prefixed
+    files and subdirectories (`_SUCCESS`, `.crc`, staging dirs) and
+    zero-length files are skipped, as the reference's listing does (S4).
+    Uses the Hadoop FileSystem of the path, so file:// and s3a:// list
+    alike. Raises FileNotFoundError when nothing matches, as a Spark read
+    of the path would fail."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    pending = list(fs.globStatus(hpath) or [])
+    if not pending:
+        raise FileNotFoundError(f"no file matches {path}")
+    hidden = lambda st: st.getPath().getName().startswith(("_", "."))  # noqa: E731
+    files = []
+    while pending:
+        st = pending.pop()
+        if st.isDirectory():
+            pending += [c for c in fs.listStatus(st.getPath()) if not hidden(c)]
+        elif st.getLen() > 0 and not hidden(st):
+            files.append(st.getPath().toString())
+    return sorted(files)
+
+
 def csv_header(spark: SparkSession, path: str) -> list[str]:
-    """Column names from a CSV file's header line (reads ONE line).
+    """Column names from a CSV file's header line.
 
     With explicit schemas, Spark maps CSV columns positionally — a
     structurally missing column silently becomes all-null. The reference
     detects missing columns because pandas infers from the header
-    (schema_check.py:95-98); this helper restores that check for ~zero cost.
-    """
-    row = spark.read.text(path).limit(1).collect()
-    if not row:
+    (schema_check.py:95-98); this helper restores that check.
+
+    The first line is read on the driver through the path's Hadoop
+    FileSystem (file://, s3a://), decompressed by the codec its extension
+    names (`.gz`, `.bz2`, ...), so the check submits no Spark job. An empty
+    file gives []."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(hpath)
+    stream = hpath.getFileSystem(conf).open(hpath)
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        line = jvm.java.io.BufferedReader(
+            jvm.java.io.InputStreamReader(stream, "UTF-8")
+        ).readLine()
+    finally:
+        stream.close()
+    if line is None:
         return []
-    return [c.strip().strip('"') for c in row[0][0].split(",")]
+    return [c.strip().strip('"') for c in line.split(",")]
 
 
 def missing_required_columns(
     spark: SparkSession, paths: list[str] | str, required: list[str]
 ) -> dict[str, list[str]]:
-    """Per-file required-columns-absent map (empty when all present)."""
+    """Per-file required-columns-absent map (empty when all present). Each
+    path may be a file, a directory or a glob; every data file it names
+    (see _data_files) is checked, keyed by its qualified path. Driver-side
+    listing and header reads only: no Spark job."""
     if isinstance(paths, str):
         paths = [paths]
     out: dict[str, list[str]] = {}
-    for p in paths:
-        have = set(csv_header(spark, p))
+    for f in (f for p in paths for f in _data_files(spark, p)):
+        have = set(csv_header(spark, f))
         missing = [c for c in required if c not in have]
         if missing:
-            out[p] = missing
+            out[f] = missing
     return out
 
 

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import time
+import uuid
 from pathlib import Path
 
 import pytest
@@ -42,3 +44,37 @@ def spark():
         app_name="tests", master="local[8]", shuffle_partitions=8
     )
     yield spark
+
+
+@pytest.fixture
+def run_in_job_group(spark):
+    """run(fn) -> (fn's result, ids of the Spark jobs submitted under the job
+    group fn ran in, ids of jobs submitted meanwhile with no job group).
+
+    The status tracker is fed by the asynchronous listener bus, so a marker
+    job runs afterwards in a group of its own and is waited for: the bus
+    delivers events in order, so every earlier job is visible by then."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, "test")
+        try:
+            result = fn()
+            sc.setJobGroup(f"{group}-marker", "test")
+            spark.range(1).count()
+        finally:
+            sc._jsc.clearJobGroup()  # noqa: SLF001
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(f"{group}-marker"):
+            assert time.monotonic() < deadline, "marker job never reached the status tracker"
+            time.sleep(0.05)
+        return (
+            result,
+            sorted(tracker.getJobIdsForGroup(group)),
+            sorted(set(tracker.getJobIdsForGroup(None)) - ungrouped),
+        )
+
+    return run

@@ -66,14 +66,25 @@ def fixture_dir():
     return paths
 
 
-def test_pipeline_end_to_end(spark, fixture_dir):
-    out = run_pipeline(
+def _persisted(spark) -> set[int]:
+    """Ids of the persisted RDDs. Compared as sets, since the context cleaner
+    may unpersist earlier tests' garbage-collected frames meanwhile."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: SLF001
+
+
+def test_pipeline_end_to_end(spark, run_in_job_group, fixture_dir):
+    persisted = _persisted(spark)
+    out, group_jobs, ungrouped_jobs = run_in_job_group(lambda: run_pipeline(
         spark,
         fixture_dir["users"],
         fixture_dir["songs"],
         fixture_dir["streams"],
         fixture_dir["out"],
-    )
+    ))
+    # the cleaned inputs are released; the caller's job group tags every
+    # job, including those run on the pipeline's worker threads
+    assert _persisted(spark) <= persisted
+    assert group_jobs and ungrouped_jobs == []
     # 8 stream rows - 1 overlap dup - 2 orphans = 5 enriched events
     assert out["enriched"].count() == 5
     genre = {r["track_genre"]: r for r in out["genre_kpis"].collect()}
@@ -101,6 +112,7 @@ def test_pipeline_validation_aborts_on_missing_column(spark, fixture_dir, tmp_pa
     # streams file without listen_time → required-column error aborts (V1)
     bad = tmp_path / "bad.csv"
     bad.write_text("user_id,track_id\n1,t1\n")
+    persisted = _persisted(spark)
     with pytest.raises(ValueError, match="streams"):
         run_pipeline(
             spark,
@@ -109,3 +121,5 @@ def test_pipeline_validation_aborts_on_missing_column(spark, fixture_dir, tmp_pa
             str(bad),
             str(tmp_path / "out"),
         )
+    assert _persisted(spark) <= persisted
+    assert not (tmp_path / "out" / "genre_kpis.csv").exists()

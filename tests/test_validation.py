@@ -3,13 +3,21 @@
 
 from __future__ import annotations
 
+import gzip
+import time
+
 import pytest
 
+from s3_to_redshift_with_airflow_spark.operators import validation
 from s3_to_redshift_with_airflow_spark.operators.validation import (
     RangeCheck,
     TableRules,
     evaluate,
     validate_datasets,
+)
+from s3_to_redshift_with_airflow_spark.sources.readers import (
+    csv_header,
+    missing_required_columns,
 )
 
 RULES = TableRules(
@@ -113,3 +121,104 @@ def test_lenient_csv_corrupt_records_in_report(spark, tmp_path):
     # corrupt raw text is preserved for quarantine/debugging
     bad = {r["_corrupt_record"] for r in df.collect() if r["_corrupt_record"]}
     assert bad == {"2,not_a_number", "4"}
+
+
+def test_validate_datasets_keeps_input_order_and_names_failures_in_order(spark, dirty):
+    clean = spark.createDataFrame([(1, "t1")], "user_id long, track_id string")
+    ok_rules = TableRules(required_columns=["user_id"])
+    ok = validate_datasets(
+        {"zeta": (clean, ok_rules), "alpha": (clean, ok_rules), "mid": (clean, ok_rules)}
+    )
+    assert list(ok["datasets"]) == ["zeta", "alpha", "mid"]
+
+    with pytest.raises(ValueError) as exc:
+        validate_datasets(
+            {"zz_bad": (dirty, RULES), "clean": (clean, ok_rules), "aa_bad": (dirty, RULES)}
+        )
+    msg = str(exc.value)
+    assert msg.startswith("validation failed for ['zz_bad', 'aa_bad']")
+    assert msg.index("zz_bad") < msg.index("aa_bad")
+
+
+def test_validate_datasets_raises_only_after_every_table_is_done(monkeypatch):
+    """An error in one table's evaluation reaches the caller only once the
+    other tables' evaluations have returned (no job left running)."""
+    finished = []
+
+    def fake_evaluate(df, rules, dataset, extra_errors=None):
+        if dataset == "broken":
+            raise RuntimeError("evaluation blew up")
+        time.sleep(0.3)
+        finished.append(dataset)
+        return {"passed": True, "errors": []}
+
+    monkeypatch.setattr(validation, "evaluate", fake_evaluate)
+    rules = TableRules()
+    with pytest.raises(RuntimeError, match="blew up"):
+        validate_datasets({"a": (None, rules), "broken": (None, rules), "b": (None, rules)})
+    assert sorted(finished) == ["a", "b"]
+
+
+STREAM_COLS = ["user_id", "track_id", "listen_time"]
+
+
+def _stream_dir(d):
+    """A 2,000-row good stream file, a 1-row file without listen_time, and
+    what a listing must skip (a marker, a hidden file, an empty file, a
+    staging directory)."""
+    (d / "_temporary").mkdir(parents=True)
+    (d / "_temporary" / "part-0.csv").write_text("user_id\n1\n")
+    rows = "".join(f"{i},t{i % 7},2024-06-25 00:00:{i % 60:02d}\n" for i in range(2000))
+    (d / "good.csv").write_text("user_id,track_id,listen_time\n" + rows)
+    (d / "bad.csv").write_text("user_id,track_id\n1,t1\n")
+    (d / "_SUCCESS").write_text("")
+    (d / ".good.csv.crc").write_text("junk")
+    (d / "empty.csv").write_text("")
+    return d
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["directory", "glob", "file_list", "gzip", "quoted", "crlf"],
+)
+def test_header_check_reads_every_file_on_the_driver(spark, run_in_job_group, tmp_path, case):
+    """V12 checks each data file a path names, through the driver's
+    FileSystem: a directory or glob with one bad file reports that file,
+    compressed and quoted/CRLF headers parse, and no Spark job runs."""
+    good_hdr = "user_id,track_id,listen_time"
+    if case in ("directory", "glob", "file_list"):
+        d = _stream_dir(tmp_path / "streams")
+        paths = {
+            "directory": str(d),
+            "glob": f"{d}/*.csv",
+            "file_list": [str(d / "good.csv"), str(d / "bad.csv")],
+        }[case]
+        want = {"bad.csv": ["listen_time"]}
+    elif case == "gzip":
+        with gzip.open(tmp_path / "good.csv.gz", "wt") as f:
+            f.write(good_hdr + "\n1,t1,2024-06-25 00:00:00\n")
+        with gzip.open(tmp_path / "bad.csv.gz", "wt") as f:
+            f.write("user_id,listen_time\n1,2024-06-25 00:00:00\n")
+        paths, want = f"{tmp_path}/*.csv.gz", {"bad.csv.gz": ["track_id"]}
+    elif case == "quoted":
+        (tmp_path / "q.csv").write_text('"user_id","track_id","listen_time"\n1,t1,x\n')
+        paths, want = str(tmp_path / "q.csv"), {}
+    else:
+        (tmp_path / "w.csv").write_bytes(b"user_id,track_id,listen_time\r\n1,t1,x\r\n")
+        paths, want = str(tmp_path / "w.csv"), {}
+
+    got, jobs, _ = run_in_job_group(
+        lambda: missing_required_columns(spark, paths, STREAM_COLS)
+    )
+    assert {k.rsplit("/", 1)[-1]: v for k, v in got.items()} == want
+    assert jobs == []
+
+
+def test_csv_header_of_an_empty_file_is_empty(spark, tmp_path):
+    (tmp_path / "empty.csv").write_text("")
+    assert csv_header(spark, str(tmp_path / "empty.csv")) == []
+
+
+def test_header_check_of_a_missing_path_raises(spark, tmp_path):
+    with pytest.raises(FileNotFoundError):
+        missing_required_columns(spark, str(tmp_path / "nope" / "*.csv"), STREAM_COLS)
