@@ -3903,8 +3903,8 @@ def q_streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped within the batch (min-id survivor), anti-joined against the
     persisted bucketed fingerprint store, its accepted rows published as
     an immutable corpus segment, and its fingerprints folded back
-    (per-key idempotent min-id merge — catch-up recovery, no ledger
-    needed). The accepted union must equal the batch exact-dedup
+    (min-id merge, committed with the gate's ledger by the bucketed
+    stores' epoch commit). The accepted union must equal the batch exact-dedup
     survivor corpus: one row per content fingerprint, held by the
     smallest doc_id (epochs ascend by doc_id, so first-epoch-wins IS
     global min). Exact oracle over the full corpus."""

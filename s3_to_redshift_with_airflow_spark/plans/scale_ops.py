@@ -7238,9 +7238,8 @@ def q_streaming_join_agg_retract_maintain_bucketed(
     same full-recompute exact oracle, but the stored aggregate-over-join
     state is hash-bucketed and each epoch rewrites ONLY the buckets its
     joined delta touches — the per-user-grain shape. The merge rides the
-    park-until-ledger rollback protocol (ADVICE r9), so the
-    crash-at-every-fs-op guarantee transfers from the weighted-agg
-    family unchanged."""
+    bucketed stores' epoch commit, so the crash-at-every-fs-op guarantee
+    transfers from the weighted-agg family unchanged."""
     import tempfile
 
     from ..session import ensure_utc

@@ -30,6 +30,7 @@ from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
     foreach_batch_histogram_maintain,
     foreach_batch_upsert,
 )
+from tests.crashfs import CrashNow, patch_crashing
 
 
 def _snap(spark, path):
@@ -352,41 +353,6 @@ def test_compaction_crash_at_every_step_is_recoverable(spark, tmp_path):
 # -------------------- r10: additive bucketed store crash windows (ADVICE r9) --
 
 
-class _CrashNow(Exception):
-    """Simulated process death between two filesystem operations."""
-
-
-class _CrashingFS:
-    """Proxy over the Hadoop FileSystem that spends one unit of `budget`
-    per MUTATING op (rename/delete/mkdirs) and raises _CrashNow when it
-    runs out — read ops (exists, globStatus, ...) pass through free. Lets
-    a test enumerate every fs-op prefix of a sink's mutation sequence."""
-
-    def __init__(self, fs, budget):
-        self._fs = fs
-        self._budget = budget
-
-    def _spend(self):
-        self._budget[0] -= 1
-        if self._budget[0] < 0:
-            raise _CrashNow()
-
-    def rename(self, src, dst):
-        self._spend()
-        return self._fs.rename(src, dst)
-
-    def delete(self, path, recursive=True):
-        self._spend()
-        return self._fs.delete(path, recursive)
-
-    def mkdirs(self, path):
-        self._spend()
-        return self._fs.mkdirs(path)
-
-    def __getattr__(self, name):
-        return getattr(self._fs, name)
-
-
 @pytest.mark.slow
 def test_wagg_bucketed_crash_at_every_fs_op_is_recoverable(
     spark, tmp_path, monkeypatch
@@ -458,36 +424,19 @@ def test_wagg_bucketed_crash_at_every_fs_op_is_recoverable(
     plain(delta1, 1)
     want1 = snap(plain_t)
 
-    real_hfs, real_install = pl._hadoop_fs, pl._install
     crash_after = 0
     while True:
         target = str(tmp_path / f"crash{crash_after}")
         write_bucketed_store(state, target, ["k"], n_buckets)
-        budget = [crash_after]
-
-        def crashing_hfs(spark_, path, _b=budget):
-            fs, P = real_hfs(spark_, path)
-            return _CrashingFS(fs, _b), P
-
-        def crashing_install(*a, _b=budget, **kw):
-            _b[0] -= 1
-            if _b[0] < 0:
-                raise _CrashNow()
-            return real_install(*a, **kw)
-
         sink = foreach_batch_weighted_agg_maintain_bucketed(
             target, ["k"], "value", n_buckets=n_buckets
         )
-        monkeypatch.setattr(pl, "_hadoop_fs", crashing_hfs)
-        monkeypatch.setattr(pl, "_install", crashing_install)
-        try:
-            sink(delta0, 0)
-            completed = True
-        except _CrashNow:
-            completed = False
-        finally:
-            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
-            monkeypatch.setattr(pl, "_install", real_install)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                sink(delta0, 0)
+                completed = True
+            except CrashNow:
+                completed = False
 
         # at-least-once replay of the same epoch after the crash: recovery
         # must rewind (or finalize) so the replay lands on the exact state
@@ -497,8 +446,8 @@ def test_wagg_bucketed_crash_at_every_fs_op_is_recoverable(
         # zero-emptied bucket stays gone (not resurrected by rollback)
         assert not os.path.exists(f"{target}/bucket={int(target_b)}")
         # no crash debris
-        assert not os.path.exists(target + "__prevb")
-        assert not os.path.exists(target + "__waggb_epoch0")
+        assert not os.path.exists(target + "__park")
+        assert not os.path.exists(target + "__staged")
         # and the next epoch applies cleanly on top
         sink(delta1, 1)
         assert snap(target) == want1, f"crash point {crash_after}"
@@ -513,7 +462,6 @@ def test_wagg_bucketed_rollback_itself_is_reentrant(spark, tmp_path, monkeypatch
     """A crash DURING recovery's rewind must leave a state the next
     recovery completes from: crash the epoch mid-bucket-loop, then crash
     the rollback at every one of ITS fs ops, then replay cleanly."""
-    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         foreach_batch_weighted_agg_maintain,
         foreach_batch_weighted_agg_maintain_bucketed,
@@ -537,53 +485,25 @@ def test_wagg_bucketed_rollback_itself_is_reentrant(spark, tmp_path, monkeypatch
         for r in spark.read.parquet(plain_t).collect()
     )
 
-    real_hfs, real_install = pl._hadoop_fs, pl._install
     for rollback_crash in range(0, 12):
         target = str(tmp_path / f"rb{rollback_crash}")
         write_bucketed_store(state, target, ["k"], 8)
         sink = foreach_batch_weighted_agg_maintain_bucketed(
             target, ["k"], "value", n_buckets=8
         )
-        # first crash: mid-mutation (after the manifest + a few bucket moves)
-        budget = [5]
-        monkeypatch.setattr(
-            pl,
-            "_hadoop_fs",
-            lambda s, p, _b=budget: (_CrashingFS(real_hfs(s, p)[0], _b), real_hfs(s, p)[1]),
-        )
-        monkeypatch.setattr(
-            pl,
-            "_install",
-            lambda *a, _b=budget, **kw: (_b.__setitem__(0, _b[0] - 1), real_install(*a, **kw))[1]
-            if _b[0] > 0
-            else (_ for _ in ()).throw(_CrashNow()),
-        )
-        try:
-            sink(delta, 0)
-        except _CrashNow:
-            pass
+        # first crash: mid-mutation (after the journal + a few bucket moves)
+        with patch_crashing(monkeypatch, [5]):
+            try:
+                sink(delta, 0)
+            except CrashNow:
+                pass
         # second crash: during the replay's ROLLBACK
-        budget2 = [rollback_crash]
-        monkeypatch.setattr(
-            pl,
-            "_hadoop_fs",
-            lambda s, p, _b=budget2: (_CrashingFS(real_hfs(s, p)[0], _b), real_hfs(s, p)[1]),
-        )
-        monkeypatch.setattr(
-            pl,
-            "_install",
-            lambda *a, _b=budget2, **kw: (_b.__setitem__(0, _b[0] - 1), real_install(*a, **kw))[1]
-            if _b[0] > 0
-            else (_ for _ in ()).throw(_CrashNow()),
-        )
-        try:
-            sink(delta, 0)
-            second_completed = True
-        except _CrashNow:
-            second_completed = False
-        finally:
-            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
-            monkeypatch.setattr(pl, "_install", real_install)
+        with patch_crashing(monkeypatch, [rollback_crash]):
+            try:
+                sink(delta, 0)
+                second_completed = True
+            except CrashNow:
+                second_completed = False
         # clean replay converges regardless of where the rollback died
         sink(delta, 0)
         got = sorted(
@@ -593,3 +513,71 @@ def test_wagg_bucketed_rollback_itself_is_reentrant(spark, tmp_path, monkeypatch
         assert got == want, f"rollback crash point {rollback_crash}"
         if second_completed:
             break
+
+
+@pytest.mark.slow
+def test_dedup_gate_crash_at_every_fs_op_is_recoverable(
+    spark, tmp_path, monkeypatch
+):
+    """The dedup gate's epoch — segment publish, then the fingerprint
+    fold committed by `_epoch_commit` — killed after EVERY mutating fs
+    op, then replayed: corpus and fingerprint store equal a crash-free
+    run's, the ledger reads the epoch, no park or staged dir is left,
+    and the next epoch (a dup of the crashed epoch's doc plus a new
+    one) gates against the folded store."""
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+    from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+        foreach_batch_dedup_gate,
+        read_dedup_gate_corpus,
+    )
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    e0 = docs([(1, "alpha beta"), (2, "Alpha  Beta"), (3, "gamma")])
+    e1 = docs([(10, "GAMMA"), (11, "delta text"), (12, "eps"), (13, "delta  text")])
+    e2 = docs([(20, "Eps"), (21, "zeta")])
+
+    def corpus(store):
+        return sorted(
+            r["doc_id"] for r in read_dedup_gate_corpus(spark, store).collect()
+        )
+
+    def fps(store):
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(f"{store}/fps").drop("bucket").collect()
+        )
+
+    ref = str(tmp_path / "ref")
+    ref_sink = foreach_batch_dedup_gate(ref, n_buckets=4)
+    ref_sink(e0, 0)
+    ref_sink(e1, 1)
+    want_corpus, want_fps = corpus(ref), fps(ref)
+    ref_sink(e2, 2)
+    want_next = corpus(ref)
+    assert want_corpus == [1, 3, 11, 12] and want_next == [1, 3, 11, 12, 21]
+
+    crash_after = 0
+    while True:
+        store = str(tmp_path / f"gate{crash_after}")
+        sink = foreach_batch_dedup_gate(store, n_buckets=4)
+        sink(e0, 0)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                sink(e1, 1)
+                completed = True
+            except CrashNow:
+                completed = False
+        sink(e1, 1)  # at-least-once replay
+        assert corpus(store) == want_corpus, f"crash point {crash_after}"
+        assert fps(store) == want_fps, f"crash point {crash_after}"
+        assert pl._last_applied_epoch(spark, store) == 1
+        assert not os.path.exists(store + "__park")
+        assert not os.path.exists(store + "__staged")
+        sink(e2, 2)
+        assert corpus(store) == want_next, f"crash point {crash_after}"
+        if completed:
+            break
+        crash_after += 1
+    assert crash_after >= 12  # publish, journal, every bucket, marker, cleanup

@@ -464,17 +464,16 @@ def test_join_agg_retract_bucketed_matches_plain_and_crash_recovers(
 ):
     """The bucketed join-retract sink is row-identical to the plain one
     under the same interleaved insert/delete epochs, gates replays, and
-    — because the merge is the shared park-until-ledger protocol — a
+    — because the merge is committed by the shared epoch commit — a
     mid-epoch crash rolls back and the replay converges exactly."""
     from pyspark.sql import functions as F
 
-    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         foreach_batch_join_agg_retract_maintain,
         foreach_batch_join_agg_retract_maintain_bucketed,
         write_bucketed_store,
     )
-    from tests.test_crash_recovery import _CrashingFS, _CrashNow
+    from tests.crashfs import CrashNow, patch_crashing
 
     dim_path = str(tmp_path / "dim")
     spark.createDataFrame(
@@ -521,21 +520,13 @@ def test_join_agg_retract_bucketed_matches_plain_and_crash_recovers(
     want = snap(buck_t)
     buck(epochs[1], 1)  # replay: gated
     assert snap(buck_t) == want
-    # crash mid-epoch 3 (after the manifest + some bucket moves), replay
-    real_hfs, real_install = pl._hadoop_fs, pl._install
-    budget = [4]
-    monkeypatch.setattr(
-        pl,
-        "_hadoop_fs",
-        lambda s, p, _b=budget: (_CrashingFS(real_hfs(s, p)[0], _b), real_hfs(s, p)[1]),
-    )
-    try:
-        buck(batch([(5, 9.0, 1), (2, 1.0, 1)]), 3)
-        crashed = False
-    except _CrashNow:
-        crashed = True
-    finally:
-        monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
+    # crash mid-epoch 3 (after the journal + some bucket moves), replay
+    with patch_crashing(monkeypatch, [4]):
+        try:
+            buck(batch([(5, 9.0, 1), (2, 1.0, 1)]), 3)
+            crashed = False
+        except CrashNow:
+            crashed = True
     buck(batch([(5, 9.0, 1), (2, 1.0, 1)]), 3)  # replay converges
     plain(batch([(5, 9.0, 1), (2, 1.0, 1)]), 3)
     assert snap(plain_t) == snap(buck_t)
@@ -555,12 +546,11 @@ def test_dedup_gate_drops_cross_epoch_dups_and_survives_crash(
     the half-folded store would lose the epoch's rows)."""
     from pyspark.sql import functions as F
 
-    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         foreach_batch_dedup_gate,
         read_dedup_gate_corpus,
     )
-    from tests.test_crash_recovery import _CrashingFS, _CrashNow
+    from tests.crashfs import CrashNow, patch_crashing
 
     store = str(tmp_path / "gate")
     sink = foreach_batch_dedup_gate(store, n_buckets=4)
@@ -583,25 +573,15 @@ def test_dedup_gate_drops_cross_epoch_dups_and_survives_crash(
     sink(batch([(10, "ALPHA BETA"), (11, "fresh text")]), 1)
     assert corpus() == [1, 3, 11]
 
-    # epoch 2 crashes between segment publish and the fold
-    real_hfs = pl._hadoop_fs
-    budget = [1]  # survives mkdirs+rename of the segment? count mutations:
+    # epoch 2 crashes between segment publish and the fold:
     # publish path = mkdirs(accepted) + rename(tmp->seg) = 2 mutations;
     # crash on the 3rd (first fold mutation)
-
-    def crashing(s, p, _b=budget):
-        fs, P = real_hfs(s, p)
-        return _CrashingFS(fs, _b), P
-
-    budget[0] = 2
-    monkeypatch.setattr(pl, "_hadoop_fs", crashing)
     crashed = False
-    try:
-        sink(batch([(20, "post crash doc"), (21, "unique one")]), 2)
-    except _CrashNow:
-        crashed = True
-    finally:
-        monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
+    with patch_crashing(monkeypatch, [2]):
+        try:
+            sink(batch([(20, "post crash doc"), (21, "unique one")]), 2)
+        except CrashNow:
+            crashed = True
     assert crashed
     # segment published (epoch decided: 20 accepted, 21 dropped as dup of 3)
     assert corpus() == [1, 3, 11, 20]

@@ -15,7 +15,7 @@ Covered surfaces:
     preserved, so serve must equal the same index at every prefix;
   - the park-until-ledger BUCKETED store (weighted-agg): the new
     read_bucketed_store_snapshot resolves mid-epoch windows to the
-    complete pre-image via the _inflight manifest + parks.
+    complete pre-image via the commit journal + parks.
 
 (The plain `_install` two-rename window already carries a reader
 assertion at every step: test_crash_recovery.py's
@@ -28,7 +28,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
 from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
     bucket_expr,
     compact_bm25_segments,
@@ -40,62 +39,7 @@ from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
     seed_bm25_index_segmented,
     write_bucketed_store,
 )
-
-
-class _CrashNow(Exception):
-    pass
-
-
-class _CrashingFS:
-    """Budgeted Hadoop FileSystem proxy (test_crash_recovery.py's
-    technique): each MUTATING op spends one unit; exhaustion raises."""
-
-    def __init__(self, fs, budget):
-        self._fs = fs
-        self._budget = budget
-
-    def _spend(self):
-        self._budget[0] -= 1
-        if self._budget[0] < 0:
-            raise _CrashNow()
-
-    def rename(self, src, dst):
-        self._spend()
-        return self._fs.rename(src, dst)
-
-    def delete(self, path, recursive=True):
-        self._spend()
-        return self._fs.delete(path, recursive)
-
-    def mkdirs(self, path):
-        self._spend()
-        return self._fs.mkdirs(path)
-
-    def __getattr__(self, name):
-        return getattr(self._fs, name)
-
-
-REAL_HFS, REAL_INSTALL = pl._hadoop_fs, pl._install
-
-
-def _patch(monkeypatch, budget):
-    def crashing_hfs(spark_, path, _b=budget):
-        fs, P = REAL_HFS(spark_, path)
-        return _CrashingFS(fs, _b), P
-
-    def crashing_install(*a, _b=budget, **kw):
-        _b[0] -= 1
-        if _b[0] < 0:
-            raise _CrashNow()
-        return REAL_INSTALL(*a, **kw)
-
-    monkeypatch.setattr(pl, "_hadoop_fs", crashing_hfs)
-    monkeypatch.setattr(pl, "_install", crashing_install)
-
-
-def _unpatch(monkeypatch):
-    monkeypatch.setattr(pl, "_hadoop_fs", REAL_HFS)
-    monkeypatch.setattr(pl, "_install", REAL_INSTALL)
+from tests.crashfs import CrashNow, patch_crashing
 
 
 # ------------------------------------------------- segmented maintain --
@@ -132,15 +76,12 @@ def test_reader_at_every_fs_op_of_segment_publish(spark, tmp_path, monkeypatch):
         idx = str(tmp_path / f"pub{crash_after}")
         seed_bm25_index_segmented(_docs(spark, [(1, "base doc words")]), idx)
         sink = foreach_batch_bm25_maintain_segmented(idx)
-        budget = [crash_after]
-        _patch(monkeypatch, budget)
-        try:
-            sink(_docs(spark, [(2, "epoch doc words")]), 0)
-            completed = True
-        except _CrashNow:
-            completed = False
-        finally:
-            _unpatch(monkeypatch)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                sink(_docs(spark, [(2, "epoch doc words")]), 0)
+                completed = True
+            except CrashNow:
+                completed = False
         # READER, before any recovery/replay runs:
         got = _serve_bm25(spark, idx)
         assert got in (want_pre, want_post), f"torn read at prefix {crash_after}"
@@ -176,15 +117,12 @@ def test_reader_at_every_fs_op_of_tiered_compaction(spark, tmp_path, monkeypatch
     crash_after = 0
     while True:
         idx, sink = seeded(f"comp{crash_after}")
-        budget = [crash_after]
-        _patch(monkeypatch, budget)
-        try:
-            compact_bm25_segments(spark, idx, tiered=True)
-            completed = True
-        except _CrashNow:
-            completed = False
-        finally:
-            _unpatch(monkeypatch)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                compact_bm25_segments(spark, idx, tiered=True)
+                completed = True
+            except CrashNow:
+                completed = False
         # READER, before any recovery runs: same content at every prefix
         assert _serve_bm25(spark, idx) == want, f"torn read at prefix {crash_after}"
         # a replayed epoch stays skipped, a fresh epoch lands, and a
@@ -209,7 +147,7 @@ def test_snapshot_reader_at_every_fs_op_of_bucketed_wagg_epoch(
     """The additive bucketed store's epoch rewrites touched buckets under
     the park-until-ledger protocol; a plain root read mid-window would
     see parked (absent) buckets. read_bucketed_store_snapshot resolves
-    the _inflight manifest + parks to the complete PRE-image while the
+    the commit journal + parks to the complete PRE-image while the
     ledger trails, and the live POST-image once it commits — enumerate
     every fs-op prefix and assert exactly that, never a mix."""
     n_buckets = 8
@@ -251,15 +189,12 @@ def test_snapshot_reader_at_every_fs_op_of_bucketed_wagg_epoch(
         sink = foreach_batch_weighted_agg_maintain_bucketed(
             target, ["k"], "value", n_buckets=n_buckets
         )
-        budget = [crash_after]
-        _patch(monkeypatch, budget)
-        try:
-            sink(delta, 0)
-            completed = True
-        except _CrashNow:
-            completed = False
-        finally:
-            _unpatch(monkeypatch)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                sink(delta, 0)
+                completed = True
+            except CrashNow:
+                completed = False
         # READER, before any recovery: complete pre- or post-image
         got = snap(read_bucketed_store_snapshot(spark, target))
         assert got in (want_pre, want_post), f"torn read at prefix {crash_after}"

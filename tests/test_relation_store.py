@@ -3,8 +3,8 @@
 bucketed (row, weight) store and its streaming consumer
 `foreach_batch_join_relation_retract_maintain`, compaction physically
 cancelling +1/-1 churn, time-travel reads, snapshot-read safety during a
-mid-install crash, and the crash-at-every-fs-op enumeration (the
-test_crash_recovery.py protocol applied to the append-shaped rollback).
+mid-install crash, and the crash-at-every-fs-op enumerations of the
+epoch commit's append and compaction shapes.
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
     read_weighted_relation_store,
     seed_weighted_relation_store,
 )
+from tests.crashfs import CrashNow, patch_crashing
 
 N_BUCKETS = 8
 
@@ -190,8 +191,8 @@ def test_compaction_physically_cancels_churn(spark, tmp_path):
     assert _serve(spark, target) == served_before  # serving unchanged
     assert _physical_rows(spark, target) == live_rows  # +1/-1 pairs GONE
     # no crash debris, ledger intact
-    assert not os.path.exists(target + "__relcprev")
-    assert not os.path.exists(target + "__relcompact")
+    assert not os.path.exists(target + "__park")
+    assert not os.path.exists(target + "__staged")
     assert _last_applied_epoch(spark, target) == 2
     # and the stream continues cleanly on the compacted store
     extra = _fact(spark, [(3, 13, -1)])
@@ -388,68 +389,17 @@ def test_weighted_join_delta_merges_into_relation_store(spark):
 # ---------- crash safety ----------
 
 
-class _CrashNow(Exception):
-    pass
-
-
-class _CrashingFS:
-    """Budgeted proxy over the Hadoop FileSystem: each MUTATING op
-    (rename/delete/mkdirs) spends one unit; exhaustion raises _CrashNow.
-    Read ops pass through free (test_crash_recovery.py's technique)."""
-
-    def __init__(self, fs, budget):
-        self._fs = fs
-        self._budget = budget
-
-    def _spend(self):
-        self._budget[0] -= 1
-        if self._budget[0] < 0:
-            raise _CrashNow()
-
-    def rename(self, src, dst):
-        self._spend()
-        return self._fs.rename(src, dst)
-
-    def delete(self, path, recursive=True):
-        self._spend()
-        return self._fs.delete(path, recursive)
-
-    def mkdirs(self, path):
-        self._spend()
-        return self._fs.mkdirs(path)
-
-    def __getattr__(self, name):
-        return getattr(self._fs, name)
-
-
-def _patch_crashing(monkeypatch, pl, real_hfs, real_install, budget):
-    def crashing_hfs(spark_, path, _b=budget):
-        fs, P = real_hfs(spark_, path)
-        return _CrashingFS(fs, _b), P
-
-    def crashing_install(*a, _b=budget, **kw):
-        _b[0] -= 1
-        if _b[0] < 0:
-            raise _CrashNow()
-        return real_install(*a, **kw)
-
-    monkeypatch.setattr(pl, "_hadoop_fs", crashing_hfs)
-    monkeypatch.setattr(pl, "_install", crashing_install)
-
-
 @pytest.mark.slow
 def test_relation_append_crash_at_every_fs_op_is_recoverable(
     spark, tmp_path, monkeypatch
 ):
     """Appends are additive (a replayed epoch would double its rows), so
-    the manifest-rollback protocol must rewind every half-installed
-    epoch: kill the sink after EVERY mutating fs op — including between
-    the manifest rename and the first subdir move, mid-subdir-loop, on a
+    the epoch commit must rewind every half-installed epoch: kill the
+    sink after EVERY mutating fs op — including between the journal
+    rename and the first subdir move, mid-subdir-loop, on a
     bucket born this epoch, and between the ledger install and cleanup —
     then replay, and assert the served relation equals the crash-free
     run exactly (no doubled rows, no orphaned subdirs, no debris)."""
-    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
-
     epochs = _epochs(spark)
     ref_target, ref_sink = _build(spark, tmp_path, name="ref")
     ref_sink(epochs[0], 0)
@@ -457,20 +407,15 @@ def test_relation_append_crash_at_every_fs_op_is_recoverable(
     ref_sink(epochs[1], 1)
     want1 = _serve(spark, ref_target)
 
-    real_hfs, real_install = pl._hadoop_fs, pl._install
     crash_after = 0
     while True:
         target, sink = _build(spark, tmp_path, name=f"crash{crash_after}")
-        budget = [crash_after]
-        _patch_crashing(monkeypatch, pl, real_hfs, real_install, budget)
-        try:
-            sink(epochs[0], 0)
-            completed = True
-        except _CrashNow:
-            completed = False
-        finally:
-            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
-            monkeypatch.setattr(pl, "_install", real_install)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                sink(epochs[0], 0)
+                completed = True
+            except CrashNow:
+                completed = False
 
         # SNAPSHOT-READ SAFETY: before any recovery runs, a reader must
         # see exactly the pre-epoch committed state or the post-epoch
@@ -481,8 +426,8 @@ def test_relation_append_crash_at_every_fs_op_is_recoverable(
         sink(epochs[0], 0)  # at-least-once replay; recovery runs inside
         assert _serve(spark, target) == want0, f"crash point {crash_after}"
         assert _last_applied_epoch(spark, target) == 0
-        assert not os.path.exists(target + "__relprev")
-        assert not os.path.exists(target + "__rel_epoch0")
+        assert not os.path.exists(target + "__park")
+        assert not os.path.exists(target + "__staged")
         sink(epochs[1], 1)
         assert _serve(spark, target) == want1, f"crash point {crash_after}"
         if completed:
@@ -495,15 +440,13 @@ def test_relation_append_crash_at_every_fs_op_is_recoverable(
 def test_relation_compaction_crash_at_every_fs_op_is_recoverable(
     spark, tmp_path, monkeypatch
 ):
-    """Compaction never advances the ledger, so recovery ALWAYS rewinds a
-    surviving park — and a half-rewound store still serves the same
-    relation (netting is content-preserving per bucket). Crash compaction
+    """A compaction crashed before its `_compacted` marker installs is
+    rewound, after it is finalized — and a half-rewound store still
+    serves the same relation (netting is content-preserving per bucket).
+    Crash compaction
     at every mutating fs op, serve (content must be unchanged), re-run
     compaction to completion, and assert the churn is then gone."""
-    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
-
     epochs = _epochs(spark)
-    real_hfs, real_install = pl._hadoop_fs, pl._install
     crash_after = 0
     while True:
         target, sink = _build(spark, tmp_path, name=f"cc{crash_after}")
@@ -511,22 +454,18 @@ def test_relation_compaction_crash_at_every_fs_op_is_recoverable(
             sink(e, i)
         want = _serve(spark, target)
         live_rows = len(want)
-        budget = [crash_after]
-        _patch_crashing(monkeypatch, pl, real_hfs, real_install, budget)
-        try:
-            compact_weighted_relation_store(spark, target)
-            completed = True
-        except _CrashNow:
-            completed = False
-        finally:
-            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
-            monkeypatch.setattr(pl, "_install", real_install)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                compact_weighted_relation_store(spark, target)
+                completed = True
+            except CrashNow:
+                completed = False
 
         compact_weighted_relation_store(spark, target)  # recovery + redo
         assert _serve(spark, target) == want, f"crash point {crash_after}"
         assert _physical_rows(spark, target) == live_rows
-        assert not os.path.exists(target + "__relcprev")
-        assert not os.path.exists(target + "__relcompact")
+        assert not os.path.exists(target + "__park")
+        assert not os.path.exists(target + "__staged")
         if completed:
             break
         crash_after += 1
@@ -541,32 +480,23 @@ def test_relation_rollback_itself_is_reentrant(spark, tmp_path, monkeypatch):
     import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
 
     epochs = _epochs(spark)
-    real_hfs, real_install = pl._hadoop_fs, pl._install
     for rb_crash in range(0, 8):
         target, sink = _build(spark, tmp_path, name=f"rb{rb_crash}")
         sink(epochs[0], 0)
         want = _serve(spark, target)
-        # crash epoch 1 mid-mutation (after manifest + some subdir moves)
-        budget = [4]
-        _patch_crashing(monkeypatch, pl, real_hfs, real_install, budget)
-        try:
-            sink(epochs[1], 1)
-            raise AssertionError("expected the staged crash")
-        except _CrashNow:
-            pass
-        finally:
-            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
-            monkeypatch.setattr(pl, "_install", real_install)
+        # crash epoch 1 mid-mutation (after journal + some subdir moves)
+        with patch_crashing(monkeypatch, [4]):
+            try:
+                sink(epochs[1], 1)
+                raise AssertionError("expected the staged crash")
+            except CrashNow:
+                pass
         # crash the ROLLBACK at fs-op rb_crash
-        budget2 = [rb_crash]
-        _patch_crashing(monkeypatch, pl, real_hfs, real_install, budget2)
-        try:
-            pl._rollback_or_commit_relation(spark, target)
-        except _CrashNow:
-            pass
-        finally:
-            monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
-            monkeypatch.setattr(pl, "_install", real_install)
+        with patch_crashing(monkeypatch, [rb_crash]):
+            try:
+                pl._epoch_recover(spark, target)
+            except CrashNow:
+                pass
         assert _serve(spark, target) == want  # still the committed snapshot
         sink(epochs[1], 1)  # replay: recovery completes, epoch applies once
         ref_t, ref_s = _build(spark, tmp_path, name=f"rbref{rb_crash}")

@@ -20,11 +20,13 @@ from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
     compact_weighted_relation_store,
     foreach_batch_bm25_maintain_segmented,
     foreach_batch_join_relation_retract_maintain,
+    foreach_batch_upsert_bucketed,
     read_bm25_index_segmented,
     read_bm25_index_segmented_at,
     read_weighted_relation_store,
     seed_bm25_index_segmented,
     seed_weighted_relation_store,
+    write_bucketed_store,
 )
 
 
@@ -36,8 +38,9 @@ def _docs(spark, rows):
 def stores(spark, tmp_path_factory):
     """A BM25 segment store (seed, one epoch, full merge, one more epoch:
     merged seg_base with `_covers`, compaction marker, manifest, summary
-    with `_smeta`) and a relation store (one epoch, compacted: `_ledger`
-    and `_compacted`), each built once and copied per case."""
+    with `_smeta`), a relation store (one epoch, compacted: `_ledger`
+    and `_compacted`) and a seeded bucketed upsert store, each built once
+    and copied per case."""
     base = tmp_path_factory.mktemp("formats")
     bm25 = str(base / "bm25")
     seed_bm25_index_segmented(
@@ -66,7 +69,15 @@ def stores(spark, tmp_path_factory):
         bucket_keys=["f_k"], n_buckets=4,
     )(spark.createDataFrame([(1, 2, 1)], "f_k bigint, pay bigint, w int"), 0)
     compact_weighted_relation_store(spark, rel)
-    return {"bm25": bm25, "relation": rel}
+
+    bucketed = str(base / "bucketed")
+    write_bucketed_store(
+        spark.range(8).select(F.col("id").alias("k"), F.col("id").alias("v")),
+        bucketed,
+        ["k"],
+        4,
+    )
+    return {"bm25": bm25, "relation": rel, "bucketed": bucketed}
 
 
 def _bm25_epoch(spark, root, doc_id):
@@ -85,6 +96,9 @@ _ACTIONS = {
     "relation_compact": lambda spark, root: compact_weighted_relation_store(
         spark, root
     ),
+    "upsert_epoch": lambda spark, root: foreach_batch_upsert_bucketed(
+        root, keys=["k"], n_buckets=4
+    )(spark.createDataFrame([(1, 5)], "k bigint, v bigint"), 0),
 }
 
 # (store, file relative to the store root, shape it is rewritten into,
@@ -106,6 +120,13 @@ _CASES = {
     "compacted_empty": ("relation", "_compacted", "empty", "relation_serve"),
     "stats_empty": ("bm25", "segs/seg_base/_stats", "empty", "serve"),
     "smeta_empty": ("bm25", "segs/_summary/_smeta", "empty", "epoch_in_range"),
+    # crash parks of the retired bucketed-store protocols, which a
+    # journal-less root cannot tell apart from a finished epoch
+    "prevb_bucket_park": ("bucketed", "__prevb/bucket=0", "parquet", "upsert_epoch"),
+    "relprev_inflight": ("relation", "__relprev/_inflight", "text", "relation_compact"),
+    "relcprev_bucket_park": (
+        "relation", "__relcprev/bucket=0", "parquet", "relation_compact"
+    ),
 }
 
 
@@ -114,7 +135,7 @@ def test_old_or_damaged_store_file_is_refused(spark, stores, tmp_path, case):
     kind, rel_file, shape, action = _CASES[case]
     root = str(tmp_path / kind)
     shutil.copytree(stores[kind], root)
-    # `__relprev/...` names the park root beside the store, not inside it
+    # `__<park>/...` names a park root beside the store, not inside it
     path = root + rel_file if rel_file.startswith("__") else f"{root}/{rel_file}"
     if os.path.isdir(path):
         shutil.rmtree(path)
@@ -124,6 +145,10 @@ def test_old_or_damaged_store_file_is_refused(spark, stores, tmp_path, case):
         spark.range(1).write.parquet(path)
     elif shape == "empty":
         open(path, "w").close()
+    elif shape == "text":  # the retired rewind record: epoch,bucket,existed
+        os.makedirs(os.path.dirname(path))
+        with open(path, "w") as f:
+            f.write("1,0,1\n")
     name = os.path.basename(path)
     with pytest.raises(ValueError, match=rf"{name}.*re-seed the store"):
         _ACTIONS[action](spark, root)

@@ -15,7 +15,6 @@ to the delta's bucket coverage, not the dimension.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +24,7 @@ from s3_to_redshift_with_airflow_spark.operators.retrieval import (
     write_bm25_index,
 )
 from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+    _epoch_recover,
     _last_applied_epoch,
     bucket_expr,
     foreach_batch_bm25_maintain,
@@ -32,6 +32,7 @@ from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
     foreach_batch_cdc_scd2_bucketed,
     write_bucketed_store,
 )
+from tests.crashfs import CrashNow, patch_crashing
 
 # ---------------------------------------------------------------- BM25 --
 
@@ -222,9 +223,34 @@ def test_bucketed_cdc_same_epoch_twice(spark, tmp_path):
     assert _snap(spark, buck_t) == after1
 
 
-def test_bucketed_cdc_recovers_parked_bucket(spark, tmp_path):
-    """Crash inside a bucket's swap window parks it at target__prevb;
-    the next epoch restores it before gating and applies cleanly."""
+def _crash_until(spark, monkeypatch, root, run, reached):
+    """Crash `run()` one fs op later on each attempt — rewinding each
+    attempt's crash first — until a crash leaves a state `reached()`
+    accepts: a state the commit protocol really produces."""
+    for budget in range(100):
+        with patch_crashing(monkeypatch, [budget]):
+            try:
+                run()
+            except CrashNow:
+                pass
+            else:
+                raise AssertionError("the epoch completed without reaching the state")
+        if reached():
+            return
+        _epoch_recover(spark, root)
+    raise AssertionError("no crash point reached the state")
+
+
+def _parked(root, unit):
+    return lambda: not os.path.exists(f"{root}/{unit}") and os.path.exists(
+        f"{root}__park/{unit}"
+    )
+
+
+def test_bucketed_cdc_recovers_parked_bucket(spark, tmp_path, monkeypatch):
+    """A crash inside epoch 1's commit, after the bucket key 3 lives in
+    was parked and before its replacement landed: the replayed epoch
+    rewinds the park before gating and applies cleanly."""
     buck_t = str(tmp_path / "bucketed")
     write_bucketed_store(_dim(spark, 50), buck_t, ["user_id"], _N_BUCKETS)
     sink = foreach_batch_cdc_scd2_bucketed(
@@ -236,16 +262,24 @@ def test_bucketed_cdc_recovers_parked_bucket(spark, tmp_path):
     )
     sink(_ops(spark, [(3, "2024-03-01 10:00:00", 1, 33.0, "U")]), 0)
     whole = _snap(spark, buck_t)
-    # park the bucket key 3 lives in (simulated crash in its window)
     b3 = spark.range(1).select(
         bucket_expr_lit(3, _N_BUCKETS).alias("b")
     ).collect()[0]["b"]
-    os.makedirs(f"{buck_t}__prevb", exist_ok=True)
-    shutil.move(f"{buck_t}/bucket={b3}", f"{buck_t}__prevb/bucket={b3}")
+    ops1 = _ops(
+        spark,
+        [
+            (3, "2024-04-01 10:00:00", 2, 34.0, "U"),
+            (4, "2024-04-01 10:00:00", 3, 44.0, "U"),
+        ],
+    )
+    _crash_until(
+        spark, monkeypatch, buck_t, lambda: sink(ops1, 1),
+        _parked(buck_t, f"bucket={b3}"),
+    )
     assert _snap(spark, buck_t) != whole  # rows genuinely missing while parked
-    sink(_ops(spark, [(4, "2024-04-01 10:00:00", 2, 44.0, "U")]), 1)
+    sink(ops1, 1)  # the at-least-once replay
     got = sorted(r for r in _snap(spark, buck_t))
-    assert not os.path.exists(f"{buck_t}__prevb")
+    assert not os.path.exists(f"{buck_t}__park")
     # parked bucket restored AND epoch 1 applied: key 3's epoch-0 version
     # and key 4's epoch-1 versions all present
     assert any(r[0] == 3 and r[1] == 33.0 for r in got)
@@ -258,10 +292,10 @@ def bucket_expr_lit(key: int, n_buckets: int):
     )
 
 
-def test_bucketed_cdc_stale_leftover_park_is_cleaned(spark, tmp_path):
-    """Crash AFTER a bucket's install but before park cleanup leaves a
-    stale park alongside the newer target bucket — the next epoch must
-    prefer the target and clear the leftover."""
+def test_bucketed_cdc_stale_leftover_park_is_cleaned(spark, tmp_path, monkeypatch):
+    """A crash AFTER epoch 0's ledger committed but before its parks were
+    dropped leaves a stale park beside the newer bucket — the next epoch
+    must keep the committed bucket and clear the leftover."""
     buck_t = str(tmp_path / "bucketed")
     write_bucketed_store(_dim(spark, 50), buck_t, ["user_id"], _N_BUCKETS)
     sink = foreach_batch_cdc_scd2_bucketed(
@@ -271,15 +305,19 @@ def test_bucketed_cdc_stale_leftover_park_is_cleaned(spark, tmp_path):
         order_cols=["ts", "event_id"],
         n_buckets=_N_BUCKETS,
     )
-    sink(_ops(spark, [(3, "2024-03-01 10:00:00", 1, 33.0, "U")]), 0)
-    after0 = _snap(spark, buck_t)
     b3 = spark.range(1).select(
         bucket_expr_lit(3, _N_BUCKETS).alias("b")
     ).collect()[0]["b"]
-    os.makedirs(f"{buck_t}__prevb", exist_ok=True)
-    shutil.copytree(f"{buck_t}/bucket={b3}", f"{buck_t}__prevb/bucket={b3}")
+    ops0 = _ops(spark, [(3, "2024-03-01 10:00:00", 1, 33.0, "U")])
+    _crash_until(
+        spark, monkeypatch, buck_t, lambda: sink(ops0, 0),
+        lambda: _last_applied_epoch(spark, buck_t) == 0
+        and os.path.exists(f"{buck_t}__park/bucket={b3}"),
+    )
+    after0 = _snap(spark, buck_t)
+    assert any(r[0] == 3 and r[1] == 33.0 for r in after0)
     sink(_ops(spark, [(4, "2024-04-01 10:00:00", 2, 44.0, "U")]), 1)
-    assert not os.path.exists(f"{buck_t}__prevb")
+    assert not os.path.exists(f"{buck_t}__park")
     got = _snap(spark, buck_t)
     assert [r for r in got if r[0] == 3] == [r for r in after0 if r[0] == 3]
 
@@ -425,7 +463,7 @@ def test_bucketed_upsert_matches_plain_and_bounds_rewrite(spark, tmp_path):
     assert _snap(spark, buck_t) == snap
 
 
-def test_bucketed_upsert_recovers_parked_bucket(spark, tmp_path):
+def test_bucketed_upsert_recovers_parked_bucket(spark, tmp_path, monkeypatch):
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         foreach_batch_upsert_bucketed,
     )
@@ -440,12 +478,17 @@ def test_bucketed_upsert_recovers_parked_bucket(spark, tmp_path):
     b3 = spark.range(1).select(
         bucket_expr_lit(3, _N_BUCKETS).alias("b")
     ).collect()[0]["b"]
-    os.makedirs(f"{buck_t}__prevb", exist_ok=True)
-    shutil.move(f"{buck_t}/bucket={b3}", f"{buck_t}__prevb/bucket={b3}")
-    sink(spark.createDataFrame([(4, -2)], "k long, v long"), 1)
+    # epoch 1 rewrites key 3's bucket (key 3 unchanged) and crashes with
+    # that bucket parked
+    batch1 = spark.createDataFrame([(3, -1), (4, -2)], "k long, v long")
+    _crash_until(
+        spark, monkeypatch, buck_t, lambda: sink(batch1, 1),
+        _parked(buck_t, f"bucket={b3}"),
+    )
+    sink(batch1, 1)  # the at-least-once replay
     got = dict(_snap(spark, buck_t))
     assert got[3] == -1 and got[4] == -2  # parked bucket restored, epoch applied
-    assert not os.path.exists(f"{buck_t}__prevb")
+    assert not os.path.exists(f"{buck_t}__park")
 
 
 # ------------------------------------------------- segmented IVF-PQ --

@@ -278,8 +278,7 @@ def test_dedup_gate_corpus_read_at(spark, tmp_path):
 def test_dedup_gate_corpus_compaction(spark, tmp_path):
     """Folding the accepted segments bounds segment count while keeping
     the served corpus row-identical; read_at stays exact above the fold
-    and raises inside it; a REPLAYED folded epoch republishes empty (its
-    fingerprints are all store members) and changes nothing."""
+    and raises inside it; a REPLAYED folded epoch changes nothing."""
     import os
 
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
@@ -320,8 +319,8 @@ def test_dedup_gate_corpus_compaction(spark, tmp_path):
         r["doc_id"]
         for r in read_dedup_gate_corpus_diff(spark, store, 2, 3).collect()
     ) == [5]
-    # REPLAY of a folded epoch: recompute drops everything (all fps are
-    # members), the republished segment is empty, the corpus unchanged
+    # REPLAY of a folded epoch: the gate's ledger skips it, the corpus
+    # is unchanged
     sink(_docs(spark, [(3, "gamma")]), 1)
     assert live() == [1, 2, 3, 4, 5]
     assert compact_dedup_gate_corpus(spark, store) >= 1  # refold converges
