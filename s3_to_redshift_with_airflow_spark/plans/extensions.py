@@ -3901,10 +3901,10 @@ def q_streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranges, each its own availableNow run on one checkpoint — the
     epoch-order-pinning idiom); each epoch's batch is fingerprinted,
     deduped within the batch (min-id survivor), anti-joined against the
-    persisted bucketed fingerprint store, its accepted rows published as
-    an immutable corpus segment, and its fingerprints folded back
-    (min-id merge, committed with the gate's ledger by the bucketed
-    stores' epoch commit). The accepted union must equal the batch exact-dedup
+    persisted bucketed fingerprint store, and its accepted rows become
+    an immutable corpus segment, committed together with the
+    fingerprints they fold back and the gate's ledger by the bucketed
+    stores' epoch commit. The accepted union must equal the batch exact-dedup
     survivor corpus: one row per content fingerprint, held by the
     smallest doc_id (epochs ascend by doc_id, so first-epoch-wins IS
     global min). Exact oracle over the full corpus."""

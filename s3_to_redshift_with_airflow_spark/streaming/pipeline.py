@@ -225,12 +225,9 @@ def _install(spark: SparkSession, tmp: str, target_path: str) -> None:
     A crash inside the rename window parks the store at `__prev`; the next
     install's restore step (or any `_store_path` read) recovers it. Cost:
     two metadata renames instead of delete+rename — free."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
+    fs, P = _hadoop_fs(spark, target_path)
     tgt = P(target_path)
     prev = P(target_path.rstrip("/") + "__prev")
-    fs = tgt.getFileSystem(conf)
     if not fs.exists(tgt) and fs.exists(prev):
         # a previous install crashed inside its swap window: the live
         # store is parked at the prev path. Restore it so the invariant
@@ -259,12 +256,8 @@ def _store_path(spark: SparkSession, target_path: str) -> str:
     window (target renamed away, replacement not yet installed). Pure
     read-side resolution — no filesystem mutation; the next `_install`
     moves the parked store back."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
-    tgt = P(target_path)
-    fs = tgt.getFileSystem(conf)
-    if fs.exists(tgt):
+    fs, P = _hadoop_fs(spark, target_path)
+    if fs.exists(P(target_path)):
         return target_path
     prev = target_path.rstrip("/") + "__prev"
     if fs.exists(P(prev)):
@@ -283,12 +276,9 @@ def _recover_parked(spark: SparkSession, target_path: str) -> None:
     r8 #1). If the target is absent and a park exists, the park moves
     back; a leftover park alongside an existing target (crash after
     install, before cleanup) is stale and is deleted."""
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    P = jvm.org.apache.hadoop.fs.Path
+    fs, P = _hadoop_fs(spark, target_path)
     tgt = P(target_path)
     prev = P(target_path.rstrip("/") + "__prev")
-    fs = tgt.getFileSystem(conf)
     if not fs.exists(prev):
         return
     if fs.exists(tgt):
@@ -669,7 +659,9 @@ def foreach_batch_weighted_agg_maintain_bucketed(
     return _sink
 
 
-def _read_parquet_driver_listed(spark: SparkSession, paths: list[str]) -> DataFrame:
+def _read_parquet_driver_listed(
+    spark: SparkSession, paths: list[str], schema=None
+) -> DataFrame:
     """spark.read.parquet over explicit store paths with file listing
     kept ON THE DRIVER: above
     `spark.sql.sources.parallelPartitionDiscovery.threshold` (default
@@ -678,14 +670,16 @@ def _read_parquet_driver_listed(spark: SparkSession, paths: list[str]) -> DataFr
     local directories, ~0.13 s of pure scheduling per epoch (4 of them
     in the dedup-gate lifecycle; guide §6 small-files/listing). The
     threshold is scope-raised around the read only, so corpus-sized
-    scans elsewhere keep parallel discovery."""
+    scans elsewhere keep parallel discovery. A known `schema` also skips
+    the footer-inference job every schema-less parquet read runs."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     old = spark.conf.get(key)
     if len(paths) <= int(old):
-        return spark.read.parquet(*paths)
+        return reader.parquet(*paths)
     spark.conf.set(key, str(len(paths) + 1))
     try:
-        return spark.read.parquet(*paths)
+        return reader.parquet(*paths)
     finally:
         spark.conf.set(key, old)
 
@@ -702,8 +696,9 @@ def _read_touched_buckets(
     than the work — measured 2.2->8.1 s across a 64->1600-bucket sweep on
     the dedup gate before the explicit-path read (SCALE_r10.jsonl).
     Touched buckets that do not exist yet (first key hashing into them)
-    are simply skipped. When NONE exist, `empty` (the typed empty slice
-    of a store that may not exist yet) is returned, or else the root
+    are simply skipped. `empty` is the typed empty slice of a store that
+    may not exist yet: its schema types the read (no inference job), and
+    it is returned when NONE of the buckets exist; without it the root
     read supplies the typed empty slice (one listing on the rare
     all-new-buckets epoch)."""
     fs, P = _hadoop_fs(spark, target_path)
@@ -713,8 +708,9 @@ def _read_touched_buckets(
         for p in (f"{root}/bucket={int(b)}" for b in touched)
         if fs.exists(P(p))
     ]
-    if paths:
-        return _read_parquet_driver_listed(spark, paths)  # no partition column
+    if paths:  # no partition column
+        schema = None if empty is None else empty.schema
+        return _read_parquet_driver_listed(spark, paths, schema)
     if empty is not None:
         return empty
     return (
@@ -942,23 +938,31 @@ def _touched_buckets(df: DataFrame, keys: list[str], n_buckets: int) -> list[int
     )
 
 
+def _bucket_partitioned(df: DataFrame, n_buckets: int) -> DataFrame:
+    """`df` (with its `bucket` column) hash-partitioned by bucket into
+    min(n_buckets, defaultParallelism) tasks — the task count of every
+    bucketed write. Each bucket lands in exactly one task, so each bucket
+    dir gets one file, and the write runs in ONE wave: 64 tasks for a
+    64-bucket store on 4 cores run in 16 sequential waves of per-file
+    open/commit overhead (a 3,000-row fold-shaped write on a 4-core
+    box: 1.20-1.50 s at 64 tasks, 0.56-0.73 s at 4). Not
+    `repartition("bucket")`: the keyless count is
+    spark.sql.shuffle.partitions, which AQE coalesces to ONE task for a
+    small store; an explicit count is never coalesced."""
+    tasks = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(max(1, tasks), "bucket")
+
+
 def _write_buckets(
     df: DataFrame, path: str, keys: list[str], n_buckets: int
 ) -> None:
     """Write `df` under `path/bucket=K/` dirs keyed by `bucket_expr` — the
-    seed write and every maintainer's staged epoch. Repartitions to
-    EXPLICITLY n_buckets partitions, not `repartition("bucket")`: the
-    keyless form inherits spark.sql.shuffle.partitions and AQE then
-    coalesces a small store to ONE task that writes every bucket dir
-    SEQUENTIALLY (~15 ms of file open/commit per dir — measured 0.9-1.0 s
-    per epoch fold at 64 buckets, the dominant job in the dedup-gate and
-    bucketed-CDC rows). n_buckets tasks give ~one file per bucket dir in
-    parallel; the count is the store's own layout constant, so the bound
-    is scale-adaptive (a 100 TB store raises n_buckets, not the core
-    count)."""
+    seed write and every maintainer's staged epoch — one file per bucket
+    dir (`_bucket_partitioned`)."""
     (
-        df.withColumn("bucket", bucket_expr(keys, n_buckets))
-        .repartition(n_buckets, "bucket")
+        _bucket_partitioned(
+            df.withColumn("bucket", bucket_expr(keys, n_buckets)), n_buckets
+        )
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
@@ -3084,24 +3088,23 @@ def foreach_batch_dedup_gate(
     fingerprint, the dedup_survivor discipline), anti-joined against the
     PERSISTED fingerprint membership store (hash-bucketed by
     fingerprint; the anti-join reads only the batch's touched buckets),
-    and the accepted rows are published as one immutable corpus segment
-    `accepted/seg_<epoch>` by a single rename. The union of segments IS
-    the deduped corpus: each content fingerprint appears exactly once,
-    held by the smallest id of its earliest epoch.
+    and the accepted rows become one immutable corpus segment
+    `accepted/seg_<epoch>`. The union of segments IS the deduped corpus:
+    each content fingerprint appears exactly once, held by the smallest
+    id of its earliest epoch.
 
-    Crash protocol — publish-then-fold:
-
-      (1) decide: if the epoch's segment is absent, compute the accepted
-          set against the store and publish it atomically (presence ==
-          epoch decided). A replay never recomputes a published segment —
-          recomputing against a store the crashed run already
-          half-folded would re-drop the epoch's own rows (data loss);
-          the published segment is the decision of record.
-      (2) fold: merge the SEGMENT's (fp, holder-id) rows into the
-          bucketed store `fps/` — union + min-id per fingerprint —
-          committed by `_epoch_commit` under the gate's ledger. A crash
-          between (1) and (2) leaves the ledger behind, so the replay
-          re-folds from the published segment.
+    Crash protocol — one `_epoch_commit` per epoch, under the gate's
+    ledger: the segment and the rewritten `fps/bucket=K` dirs are staged
+    side by side and committed together, the segment unit last (readers
+    see it only just before the ledger moves). A crash anywhere rewinds
+    to the pre-epoch store, and a replay either skips on the ledger or
+    recomputes the epoch against that store — the decision is a pure
+    function of the batch and the store, so it republishes the same
+    rows. Only the buckets where accepted rows land are rewritten: the
+    accepted rows are unique per fingerprint and disjoint from the store
+    (anti-joined against every candidate bucket), so each bucket's fold
+    is a plain union. An epoch that accepts nothing (all duplicates)
+    writes no segment and no bucket; its commit moves only the ledger.
 
     Epochs are serial per checkpoint, so epoch N's fold completes before
     epoch N+1's anti-join consults the store. Scale: per epoch the store
@@ -3116,79 +3119,56 @@ def foreach_batch_dedup_gate(
         root = store_dir.rstrip("/")
         fp_store = f"{root}/fps"
         # a crash inside a corpus compaction's swap window parks
-        # accepted/ whole; restore BEFORE probing or publishing
-        # (publishing into a fresh accepted/ would fork the corpus)
+        # accepted/ whole; restore BEFORE the commit installs a segment
+        # (installing into a fresh accepted/ would fork the corpus)
         _recover_parked(spark, f"{root}/accepted")
         _epoch_recover(spark, root)
         if epoch_id <= _last_applied_epoch(spark, root):
-            return  # epoch decided and folded
-        fs, P = _hadoop_fs(spark, root)
-        seg = f"{root}/accepted/seg_{int(epoch_id)}"
+            return  # at-least-once replay of a committed epoch
         empty = spark.range(0).select(
             F.lit("").alias("fp"), F.lit(0).cast("bigint").alias("holder")
         )
-
-        touched_acc: list[int] | None = None
-        if not fs.exists(P(seg)):
-            w = Window.partitionBy("__fp").orderBy(F.col(id_col).asc())
-            # persisted: the candidate set feeds the touched-bucket
-            # collect, the anti-join, and the accepted-bucket collect —
-            # unpersisted it would re-run the fingerprint window shuffle
-            # for each (round 12; unpersisted in the finally below)
-            cand = (
-                batch_df.withColumn("__fp", fingerprint(F.col(text_col)))
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            ).persist()
-            try:
-                # ONE collect doubles as the empty-epoch probe (the
-                # separate isEmpty job is gone): no candidate buckets
-                # means an empty batch — no segment, nothing to publish
-                touched = _touched_buckets(cand, ["__fp"], n_buckets)
-                if not touched:
-                    return
-                known = _read_touched_buckets(
-                    spark, fp_store, touched, empty
-                ).select(F.col("fp").alias("__fp"))
-                accepted = cand.join(F.broadcast(known), "__fp", "left_anti")
-                tmp = f"{root}/__gate_epoch{int(epoch_id)}"
-                accepted.write.mode("overwrite").parquet(tmp)
-                # the fold's touched set: the CANDIDATE buckets — a
-                # superset of accepted's buckets (accepted ⊆ cand), and
-                # the fold is an idempotent min-merge, so a bucket with
-                # no accepted rows is rewritten with identical content.
-                # Using the superset drops a whole per-epoch job (the
-                # accepted-bucket collect re-ran the store read +
-                # broadcast + anti-join); the replay path still derives
-                # the exact set from the published segment.
-                touched_acc = touched
-            finally:
-                cand.unpersist()
-            fs.mkdirs(P(f"{root}/accepted"))
-            _rename_or_raise(fs, P(tmp), P(seg))  # epoch decided
-        # fold (replays of a decided but unfolded epoch land here too)
-        seg_fps = spark.read.parquet(seg).select(
-            F.col("__fp").alias("fp"),
-            F.col(id_col).cast("bigint").alias("holder"),
-        )
-        touched = (
-            touched_acc
-            if touched_acc is not None
-            else _touched_buckets(seg_fps, ["fp"], n_buckets)
-        )
-        staged = _staged_dir(root)
-        if touched:  # else an empty accepted set: membership unchanged
-            merged = (
-                _read_touched_buckets(spark, fp_store, touched, empty)
-                .unionByName(seg_fps)
-                .groupBy("fp")
-                .agg(F.min("holder").cast("bigint").alias("holder"))
+        w = Window.partitionBy("__fp").orderBy(F.col(id_col).asc())
+        # persisted: the candidate set feeds the touched-bucket collect
+        # and the anti-join; the accepted set feeds the accepted-bucket
+        # collect, the fold and the segment write
+        cand = (
+            batch_df.withColumn("__fp", fingerprint(F.col(text_col)))
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        ).persist()
+        accepted = None
+        try:
+            # ONE collect doubles as the empty-epoch probe: no candidate
+            # buckets means an empty batch — nothing to commit
+            touched = _touched_buckets(cand, ["__fp"], n_buckets)
+            if not touched:
+                return
+            known = _read_touched_buckets(
+                spark, fp_store, touched, empty
+            ).select(F.col("fp").alias("__fp"))
+            accepted = cand.join(F.broadcast(known), "__fp", "left_anti").persist()
+            new = accepted.select(
+                F.col("__fp").alias("fp"),
+                F.col(id_col).cast("bigint").alias("holder"),
             )
-            _write_buckets(merged, f"{staged}/fps", ["fp"], n_buckets)
-        _epoch_commit(
-            spark, root, [f"fps/bucket={b}" for b in touched], epoch_id
-        )
+            landed = _touched_buckets(new, ["fp"], n_buckets)
+            units: list[str] = []
+            if landed:  # else all duplicates: only the ledger moves
+                staged = _staged_dir(root)
+                merged = _read_touched_buckets(
+                    spark, fp_store, landed, empty
+                ).unionByName(new)
+                _write_buckets(merged, f"{staged}/fps", ["fp"], n_buckets)
+                seg = f"accepted/seg_{int(epoch_id)}"
+                accepted.write.mode("overwrite").parquet(f"{staged}/{seg}")
+                units = [f"fps/bucket={b}" for b in landed] + [seg]
+            _epoch_commit(spark, root, units, epoch_id)
+        finally:
+            cand.unpersist()
+            if accepted is not None:
+                accepted.unpersist()
 
     return _sink
 
@@ -3209,7 +3189,8 @@ def read_dedup_gate_corpus_at(
     #6's stated consumer need: "the LLM-pipeline consumer's core audit"):
     a model trained on the gate's output at epoch N is reproducible for
     as long as the epoch stays cataloged — accepted segments are
-    immutable and per-epoch, and `compact_dedup_gate_corpus` folds them
+    immutable and per-epoch (an epoch that accepted nothing has none),
+    and `compact_dedup_gate_corpus` folds them
     with an exact `_covers` sidecar, so the as-of read is a catalog walk
     (`_segments_in_range`): exact for every still-cataloged epoch,
     raising the horizon error for epochs folded across the cut.
@@ -3266,9 +3247,14 @@ def compact_dedup_gate_corpus(spark: SparkSession, store_dir: str) -> int:
     (snapshot consumers pin their epoch BEFORE the retention fold, the
     same contract every warehouse time-travel feature ships).
 
+    A gate epoch that crashed inside its commit is rewound first, so its
+    installed but uncommitted segment is never folded (the replay would
+    publish it a second time).
+
     Returns the number of segments folded away (0 = nothing to do)."""
     root = store_dir.rstrip("/")
     _recover_parked(spark, f"{root}/accepted")
+    _epoch_recover(spark, root)
     acc = f"{root}/accepted"
     fs, P = _hadoop_fs(spark, acc)
     if not fs.exists(P(acc)):
@@ -3321,12 +3307,13 @@ def foreach_batch_neardup_gate(
     with an `accepted` flag — dropped docs are indexed too (the monotone
     rule compares against all SEEN docs, not just survivors; a
     kept-only index would silently flip the semantics to order-dependent
-    greedy). Publish-then-fold (the dedup-gate protocol): the segment
-    publish is the decision of record; the fold re-derives bands+shingles
-    FROM the segment on a replay (pure functions, so deterministic) and
-    set-union merges them into the two bucketed stores (`bands/` keyed
-    by (band, key), `sh/` keyed by doc id), both committed by ONE
-    `_epoch_commit` under the gate's ledger.
+    greedy). The batch's bands and shingles set-union merge into the two
+    bucketed stores (`bands/` keyed by (band, key), `sh/` keyed by doc
+    id). Crash protocol — the dedup gate's: the touched buckets of both
+    stores and the segment are committed by ONE `_epoch_commit` under
+    the gate's ledger, the segment unit last; a crash rewinds to the
+    pre-epoch store, and a replay skips on the ledger or recomputes the
+    same decision against that store.
 
     Scale: per epoch the band probe reads O(touched band buckets), the
     verify reads O(candidate corpus docs) shingle rows by bucket, the
@@ -3348,10 +3335,7 @@ def foreach_batch_neardup_gate(
         root = store_dir.rstrip("/")
         _epoch_recover(spark, root)
         if epoch_id <= _last_applied_epoch(spark, root):
-            return  # epoch decided and folded
-        fs, P = _hadoop_fs(spark, root)
-        seg = f"{root}/decided/seg_{int(epoch_id)}"
-
+            return  # at-least-once replay of a committed epoch
         empty_bands = spark.range(0).select(
             F.lit(0).alias("band"),
             F.lit(0).cast("bigint").alias("key"),
@@ -3361,117 +3345,96 @@ def foreach_batch_neardup_gate(
             F.lit(0).cast("bigint").alias("corpus_id"),
             F.array(F.lit("")).alias("sh_b"),
         )
+        # checkpointed: each is reused below, and both are tiny per epoch
+        sh_b = _shingled(batch_df, id_col, text_col, n).localCheckpoint()
+        sigs = _signatures_from_shingled(sh_b, id_col, num_hashes, seed)
+        bands_b = minhash_band_keys(sigs, id_col, n_bands, r).localCheckpoint()
+        # the band-bucket collect is the empty probe; a batch without
+        # bands may still hold docs too short to shingle, which the
+        # segment must record
+        touched = _touched_buckets(bands_b, ["band", "key"], n_buckets)
+        if not touched and batch_df.isEmpty():
+            return
+        corp_bands = _read_touched_buckets(
+            spark, f"{root}/bands", touched, empty_bands
+        )
+        cross = (
+            bands_b.select(F.col(id_col), "band", "key")
+            .join(corp_bands, ["band", "key"])
+            .select(id_col, "corpus_id")
+            .distinct()
+        )
+        left = bands_b.select(F.col(id_col).alias("__big"), "band", "key")
+        right = bands_b.select(F.col(id_col).alias("__small"), "band", "key")
+        within = (
+            left.join(right, ["band", "key"])
+            .filter(F.col("__small") < F.col("__big"))
+            .select(
+                F.col("__big").alias(id_col),
+                F.col("__small").alias("corpus_id"),
+            )
+            .distinct()
+        )
+        # exact-Jaccard verify both candidate families
+        a = sh_b.select(F.col(id_col), F.col("shingles").alias("sh_a"))
+        sh_buckets = _touched_buckets(cross, ["corpus_id"], n_buckets)
+        corp_sh = _read_touched_buckets(
+            spark, f"{root}/sh", sh_buckets, empty_sh
+        )
+        b_within = sh_b.select(
+            F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_b")
+        )
+        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+        union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
+        jac = (inter / union).alias("jaccard")
 
-        def bands_and_shingles(docs: DataFrame):
-            sh = _shingled(docs, id_col, text_col, n)
-            sigs = _signatures_from_shingled(sh, id_col, num_hashes, seed)
-            return sh, minhash_band_keys(sigs, id_col, n_bands, r)
+        def dropped(c: DataFrame, shs: DataFrame) -> DataFrame:
+            return (
+                c.join(a, id_col)
+                .join(shs, "corpus_id")
+                .select(id_col, jac)
+                .filter(F.col("jaccard") >= threshold)
+                .select(id_col)
+            )
 
-        computed = None  # happy-path reuse: decide's bands/shingles ARE
-        # the segment's (the segment is the batch + a flag), so the fold
-        # below skips re-deriving them; a replay (segment exists, decide
-        # skipped) re-derives from the segment — the crash-safe path
-        if not fs.exists(P(seg)):
-            if batch_df.isEmpty():
-                return
-            sh_b, bands_b = bands_and_shingles(batch_df)
-            sh_b = sh_b.localCheckpoint()  # reused 3x below; tiny per epoch
-            bands_b = bands_b.localCheckpoint()
-            computed = (sh_b, bands_b)
-            touched = _touched_buckets(bands_b, ["band", "key"], n_buckets)
-            corp_bands = _read_touched_buckets(
-                spark, f"{root}/bands", touched, empty_bands
+        bad = dropped(cross, corp_sh).unionByName(
+            dropped(within, b_within)
+        ).distinct()
+        decided = batch_df.join(bad, id_col, "left_anti").select(
+            "*", F.lit(True).alias("accepted")
+        ).unionByName(
+            batch_df.join(bad, id_col, "left_semi").select(
+                "*", F.lit(False).alias("accepted")
             )
-            cross = (
-                bands_b.select(F.col(id_col), "band", "key")
-                .join(corp_bands, ["band", "key"])
-                .select(id_col, "corpus_id")
-                .distinct()
-            )
-            left = bands_b.select(
-                F.col(id_col).alias("__big"), "band", "key"
-            )
-            right = bands_b.select(
-                F.col(id_col).alias("__small"), "band", "key"
-            )
-            within = (
-                left.join(right, ["band", "key"])
-                .filter(F.col("__small") < F.col("__big"))
-                .select(
-                    F.col("__big").alias(id_col),
-                    F.col("__small").alias("corpus_id"),
-                )
-                .distinct()
-            )
-            # exact-Jaccard verify both candidate families
-            a = sh_b.select(F.col(id_col), F.col("shingles").alias("sh_a"))
-            sh_buckets = _touched_buckets(cross, ["corpus_id"], n_buckets)
-            corp_sh = _read_touched_buckets(
-                spark, f"{root}/sh", sh_buckets, empty_sh
-            )
-            b_within = sh_b.select(
-                F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_b")
-            )
-            inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-            union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-            jac = (inter / union).alias("jaccard")
-
-            def dropped(c: DataFrame, shs: DataFrame) -> DataFrame:
-                return (
-                    c.join(a, id_col)
-                    .join(shs, "corpus_id")
-                    .select(id_col, jac)
-                    .filter(F.col("jaccard") >= threshold)
-                    .select(id_col)
-                )
-
-            bad = dropped(cross, corp_sh).unionByName(
-                dropped(within, b_within)
-            ).distinct()
-            decided = batch_df.join(bad, id_col, "left_anti").select(
-                "*", F.lit(True).alias("accepted")
-            ).unionByName(
-                batch_df.join(bad, id_col, "left_semi").select(
-                    "*", F.lit(False).alias("accepted")
-                )
-            )
-            tmp = f"{root}/__gate_epoch{int(epoch_id)}"
-            decided.write.mode("overwrite").parquet(tmp)
-            fs.mkdirs(P(f"{root}/decided"))
-            _rename_or_raise(fs, P(tmp), P(seg))  # epoch decided
-        # fold: ALL the segment's docs — accepted AND dropped — join the
-        # seen index; bands+shingles re-derived deterministically
-        # on replay, reused from the decide phase on the happy path
-        if computed is not None:
-            sh_s, bands_s = computed
-        else:
-            seen = spark.read.parquet(seg).drop("accepted")
-            sh_s, bands_s = bands_and_shingles(seen)
-        band_rows = bands_s.select(
+        )
+        staged = _staged_dir(root)
+        seg = f"decided/seg_{int(epoch_id)}"
+        decided.write.mode("overwrite").parquet(f"{staged}/{seg}")
+        band_rows = bands_b.select(
             "band", "key", F.col(id_col).cast("bigint").alias("corpus_id")
         )
-        sh_rows = sh_s.select(
+        sh_rows = sh_b.select(
             F.col(id_col).cast("bigint").alias("corpus_id"),
             F.col("shingles").alias("sh_b"),
         )
-        staged = _staged_dir(root)
+        # ALL the batch's docs — accepted AND dropped — join the seen index
         units: list[str] = []
-        for name, keys, rows, dedup_keys, empty in (
+        for name, keys, rows, dedup_keys, empty, landed in (
             ("bands", ["band", "key"], band_rows, ["band", "key", "corpus_id"],
-             empty_bands),
-            ("sh", ["corpus_id"], sh_rows, ["corpus_id"], empty_sh),
+             empty_bands, touched),
+            ("sh", ["corpus_id"], sh_rows, ["corpus_id"], empty_sh,
+             _touched_buckets(sh_rows, ["corpus_id"], n_buckets)),
         ):
-            touched = _touched_buckets(rows, keys, n_buckets)
-            if not touched:
+            if not landed:
                 continue
             merged = (
-                _read_touched_buckets(spark, f"{root}/{name}", touched, empty)
+                _read_touched_buckets(spark, f"{root}/{name}", landed, empty)
                 .unionByName(rows)
                 .dropDuplicates(dedup_keys)
             )
             _write_buckets(merged, f"{staged}/{name}", keys, n_buckets)
-            units += [f"{name}/bucket={b}" for b in touched]
-        _epoch_commit(spark, root, units, epoch_id)
+            units += [f"{name}/bucket={b}" for b in landed]
+        _epoch_commit(spark, root, units + [seg], epoch_id)
 
     return _sink
 
@@ -3511,9 +3474,11 @@ def seed_weighted_relation_store(
     _SUCCESS for a zero-row partitioned write), and without the sidecar
     a read of the blank store could not even infer its columns."""
     (
-        rel.withColumn("bucket", bucket_expr(bucket_keys, n_buckets))
-        .withColumn("epoch", F.lit(-1).cast("int"))
-        .repartition(n_buckets, "bucket")
+        _bucket_partitioned(
+            rel.withColumn("bucket", bucket_expr(bucket_keys, n_buckets))
+            .withColumn("epoch", F.lit(-1).cast("int")),
+            n_buckets,
+        )
         .write.mode("overwrite")
         .partitionBy("bucket", "epoch")
         .parquet(target_path)
@@ -3793,9 +3758,11 @@ def _relation_append(
     and the ledger gate has passed."""
     staged = _staged_dir(target_path)
     (
-        delta.withColumn("bucket", bucket_expr(bucket_keys, n_buckets))
-        .withColumn("epoch", F.lit(int(epoch_id)).cast("int"))
-        .repartition(n_buckets, "bucket")
+        _bucket_partitioned(
+            delta.withColumn("bucket", bucket_expr(bucket_keys, n_buckets))
+            .withColumn("epoch", F.lit(int(epoch_id)).cast("int")),
+            n_buckets,
+        )
         .write.mode("overwrite")
         .partitionBy("bucket", "epoch")
         .parquet(staged)
@@ -3875,7 +3842,7 @@ def compact_weighted_relation_store(
     )
     staged = _staged_dir(root)
     (
-        netted.repartition(max(1, len(live_buckets)), "bucket")
+        _bucket_partitioned(netted, len(live_buckets))
         .write.mode("overwrite")
         .partitionBy("bucket", "epoch")
         .parquet(staged)

@@ -8,6 +8,9 @@ makes each `_install` (one two-rename swap) spend one unit too. Once the
 budget is spent the next op raises `CrashNow` instead of running. Read
 ops pass through free, so a test enumerates every fs-op prefix of a
 mutation sequence by raising the budget until the sequence completes.
+
+`crash_at_ledger(monkeypatch)` kills an epoch commit at its commit point
+instead: every unit is in place, the `_ledger` install raises.
 """
 
 from __future__ import annotations
@@ -69,7 +72,12 @@ def patch_crashing(monkeypatch, budget):
         budget[0] -= 1
         if budget[0] < 0:
             raise CrashNow()
-        return real_install(*a, **kw)
+        # one unit for the whole swap: its own renames run on the real fs
+        pl._hadoop_fs = real_hfs
+        try:
+            return real_install(*a, **kw)
+        finally:
+            pl._hadoop_fs = crashing_hfs
 
     monkeypatch.setattr(pl, "_hadoop_fs", crashing_hfs)
     monkeypatch.setattr(pl, "_install", crashing_install)
@@ -77,4 +85,21 @@ def patch_crashing(monkeypatch, budget):
         yield
     finally:
         monkeypatch.setattr(pl, "_hadoop_fs", real_hfs)
+        monkeypatch.setattr(pl, "_install", real_install)
+
+
+@contextlib.contextmanager
+def crash_at_ledger(monkeypatch):
+    """Within the block, installing a `_ledger` marker raises `CrashNow`."""
+    real_install = pl._install
+
+    def install(spark, tmp, target):
+        if target.endswith("/_ledger"):
+            raise CrashNow()
+        return real_install(spark, tmp, target)
+
+    monkeypatch.setattr(pl, "_install", install)
+    try:
+        yield
+    finally:
         monkeypatch.setattr(pl, "_install", real_install)

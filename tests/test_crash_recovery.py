@@ -519,12 +519,12 @@ def test_wagg_bucketed_rollback_itself_is_reentrant(spark, tmp_path, monkeypatch
 def test_dedup_gate_crash_at_every_fs_op_is_recoverable(
     spark, tmp_path, monkeypatch
 ):
-    """The dedup gate's epoch — segment publish, then the fingerprint
-    fold committed by `_epoch_commit` — killed after EVERY mutating fs
-    op, then replayed: corpus and fingerprint store equal a crash-free
-    run's, the ledger reads the epoch, no park or staged dir is left,
-    and the next epoch (a dup of the crashed epoch's doc plus a new
-    one) gates against the folded store."""
+    """The dedup gate's epoch — its segment and the fingerprint buckets
+    the accepted rows land in, committed by one `_epoch_commit` — killed
+    after EVERY mutating fs op, then replayed: corpus and fingerprint
+    store equal a crash-free run's, the ledger reads the epoch, no park
+    or staged dir is left, and the next epoch (a dup of the crashed
+    epoch's doc plus a new one) gates against the folded store."""
     import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         foreach_batch_dedup_gate,
@@ -558,7 +558,7 @@ def test_dedup_gate_crash_at_every_fs_op_is_recoverable(
     want_next = corpus(ref)
     assert want_corpus == [1, 3, 11, 12] and want_next == [1, 3, 11, 12, 21]
 
-    crash_after = 0
+    crash_after, outcomes = 0, set()
     while True:
         store = str(tmp_path / f"gate{crash_after}")
         sink = foreach_batch_dedup_gate(store, n_buckets=4)
@@ -569,6 +569,7 @@ def test_dedup_gate_crash_at_every_fs_op_is_recoverable(
                 completed = True
             except CrashNow:
                 completed = False
+        outcomes.add(pl._last_applied_epoch(spark, store) == 1)
         sink(e1, 1)  # at-least-once replay
         assert corpus(store) == want_corpus, f"crash point {crash_after}"
         assert fps(store) == want_fps, f"crash point {crash_after}"
@@ -580,4 +581,87 @@ def test_dedup_gate_crash_at_every_fs_op_is_recoverable(
         if completed:
             break
         crash_after += 1
-    assert crash_after >= 12  # publish, journal, every bucket, marker, cleanup
+    assert outcomes == {False, True}  # crashes before and after the ledger
+    assert crash_after >= 9  # journal, begin, >= 2 units, ledger, cleanup
+
+
+@pytest.mark.slow
+def test_neardup_gate_crash_at_every_fs_op_is_recoverable(
+    spark, tmp_path, monkeypatch
+):
+    """The near-dup gate's epoch — its decision segment and the touched
+    `bands/` and `sh/` buckets, committed by one `_epoch_commit` — killed
+    after EVERY mutating fs op, then replayed: the corpus and both
+    bucketed stores equal a crash-free run's, the ledger reads the
+    epoch, no park or staged dir is left, and the next epoch (a near-dup
+    of the crashed epoch's doc plus a new one) gates against the folded
+    stores."""
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+    from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+        foreach_batch_neardup_gate,
+        read_neardup_gate_corpus,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    e0 = docs([(1, base), (2, "totally different content here entirely")])
+    e1 = docs([(3, base + " extra"), (4, "another unrelated document text")])
+    e2 = docs([(5, base + " extra more"), (6, "one more fresh document here")])
+
+    def gate(store):
+        return foreach_batch_neardup_gate(store, threshold=0.5, n_buckets=4)
+
+    def corpus(store):
+        return sorted(
+            r["doc_id"] for r in read_neardup_gate_corpus(spark, store).collect()
+        )
+
+    def state(store):
+        return [
+            sorted(
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in spark.read.parquet(f"{store}/{name}")
+                .drop("bucket")
+                .collect()
+            )
+            for name in ("bands", "sh")
+        ]
+
+    ref = str(tmp_path / "ref")
+    gate(ref)(e0, 0)
+    seeded = str(tmp_path / "seeded")
+    shutil.copytree(ref, seeded)
+    gate(ref)(e1, 1)
+    want_corpus, want_state = corpus(ref), state(ref)
+    gate(ref)(e2, 2)
+    want_next = corpus(ref)
+    assert want_corpus == [1, 2, 4] and want_next == [1, 2, 4, 6]
+
+    crash_after, outcomes = 0, set()
+    while True:
+        store = str(tmp_path / f"nd{crash_after}")
+        shutil.copytree(seeded, store)
+        sink = gate(store)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                sink(e1, 1)
+                completed = True
+            except CrashNow:
+                completed = False
+        outcomes.add(pl._last_applied_epoch(spark, store) == 1)
+        sink(e1, 1)  # at-least-once replay
+        assert corpus(store) == want_corpus, f"crash point {crash_after}"
+        assert state(store) == want_state, f"crash point {crash_after}"
+        assert pl._last_applied_epoch(spark, store) == 1
+        assert not os.path.exists(store + "__park")
+        assert not os.path.exists(store + "__staged")
+        sink(e2, 2)
+        assert corpus(store) == want_next, f"crash point {crash_after}"
+        if completed:
+            break
+        crash_after += 1
+    assert outcomes == {False, True}  # crashes before and after the ledger
+    assert crash_after >= 10  # journal, begin, >= 3 units, ledger, cleanup

@@ -33,15 +33,39 @@ _SHAPES = {
         1,
         "_ledger",
     ),
-    # a gate's first fold: no ledger yet, the fps/ sub-store is born
+    # a gate's first epoch: no ledger yet, the fps/ and accepted/
+    # sub-stores are born with their first units
     "first_fold": (
-        {"accepted/seg_0/part-a": "seg0"},
-        {"fps/bucket=3/part-b": "fp3", "fps/bucket=4/part-b": "fp4"},
-        ["fps/bucket=3", "fps/bucket=4"],
+        {},
+        {
+            "fps/bucket=3/part-b": "fp3",
+            "fps/bucket=4/part-b": "fp4",
+            "accepted/seg_0/part-b": "seg0",
+        },
+        ["fps/bucket=3", "fps/bucket=4", "accepted/seg_0"],
         0,
         "_ledger",
     ),
-    # a replayed fold of an empty accepted set: only the ledger moves
+    # a gate epoch: its segment is born alongside one replaced and one
+    # born fingerprint bucket, the segment unit last
+    "segment_and_buckets": (
+        {
+            "_ledger": "0",
+            "accepted/seg_0/part-a": "seg0",
+            "fps/bucket=1/part-a": "fp1",
+            "fps/bucket=3/part-a": "fp3",
+        },
+        {
+            "fps/bucket=1/part-b": "fp1+",
+            "fps/bucket=2/part-b": "fp2",
+            "accepted/seg_1/part-b": "seg1",
+        },
+        ["fps/bucket=1", "fps/bucket=2", "accepted/seg_1"],
+        1,
+        "_ledger",
+    ),
+    # an all-duplicate gate epoch: no segment and no bucket, only the
+    # ledger moves
     "no_units": (
         {"_ledger": "4", "fps/bucket=1/part-a": "fp1"},
         {},
@@ -123,6 +147,7 @@ def _post(store, staged, units, epoch, marker):
 
 def _build(base, store, staged):
     root = f"{base}/store"
+    os.makedirs(root, exist_ok=True)
     for rel, text in store.items():
         _write(f"{root}/{rel}", text)
     for rel, text in staged.items():

@@ -539,18 +539,19 @@ def test_dedup_gate_drops_cross_epoch_dups_and_survives_crash(
     spark, tmp_path, monkeypatch
 ):
     """The streaming dedup gate: planted exact dups are dropped within a
-    batch, across epochs, and under (a) replay of a decided epoch and
-    (b) a crash BETWEEN segment publish and fingerprint fold — the
-    publish-then-fold protocol's whole point: the replay must re-fold
-    from the published segment, never recompute it (recomputing against
-    the half-folded store would lose the epoch's rows)."""
+    batch, across epochs, and under (a) replay of a committed epoch and
+    (b) a crash inside the epoch's one commit, after the segment unit is
+    installed and before the ledger: the replay rewinds the half-done
+    commit and recomputes the epoch against the pre-epoch store, which
+    republishes the same rows."""
     from pyspark.sql import functions as F
 
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         foreach_batch_dedup_gate,
         read_dedup_gate_corpus,
     )
-    from tests.crashfs import CrashNow, patch_crashing
+    from tests.crashfs import CrashNow, crash_at_ledger
 
     store = str(tmp_path / "gate")
     sink = foreach_batch_dedup_gate(store, n_buckets=4)
@@ -569,26 +570,23 @@ def test_dedup_gate_drops_cross_epoch_dups_and_survives_crash(
     # epoch 1: cross-epoch dup (text of 1) + a new doc
     sink(batch([(10, "ALPHA BETA"), (11, "fresh text")]), 1)
     assert corpus() == [1, 3, 11]
-    # replay of epoch 1: decided — corpus unchanged (no duplicate segment)
+    # replay of epoch 1: committed — corpus unchanged (no duplicate segment)
     sink(batch([(10, "ALPHA BETA"), (11, "fresh text")]), 1)
     assert corpus() == [1, 3, 11]
 
-    # epoch 2 crashes between segment publish and the fold:
-    # publish path = mkdirs(accepted) + rename(tmp->seg) = 2 mutations;
-    # crash on the 3rd (first fold mutation)
-    crashed = False
-    with patch_crashing(monkeypatch, [2]):
-        try:
-            sink(batch([(20, "post crash doc"), (21, "unique one")]), 2)
-        except CrashNow:
-            crashed = True
-    assert crashed
-    # segment published (epoch decided: 20 accepted, 21 dropped as dup of 3)
+    # epoch 2 crashes at its ledger install: every unit, the segment
+    # last, is already in place
+    with crash_at_ledger(monkeypatch), pytest.raises(CrashNow):
+        sink(batch([(20, "post crash doc"), (21, "unique one")]), 2)
+    # the segment is installed (20 accepted, 21 dropped as dup of 3) but
+    # the ledger still reads epoch 1
     assert corpus() == [1, 3, 11, 20]
-    # replay: must NOT recompute (20's fp may already be half-folded);
-    # re-folds from the segment and converges
+    assert pl._last_applied_epoch(spark, store) == 1
+    # replay: rewinds the commit, recomputes against the rewound store
+    # and republishes the same rows
     sink(batch([(20, "post crash doc"), (21, "unique one")]), 2)
     assert corpus() == [1, 3, 11, 20]
+    assert pl._last_applied_epoch(spark, store) == 2
     # a later dup of 20 is now gated by the folded store
     sink(batch([(30, "POST  CRASH  DOC"), (31, "brand new")]), 3)
     assert corpus() == [1, 3, 11, 20, 31]

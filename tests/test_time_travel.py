@@ -274,6 +274,92 @@ def test_dedup_gate_corpus_read_at(spark, tmp_path):
         read_dedup_gate_corpus_diff(spark, store, 2, 0)
 
 
+def test_dedup_gate_all_duplicate_epoch_writes_nothing(spark, tmp_path):
+    """An epoch whose every doc is a duplicate commits only the ledger:
+    accepted/ and every fps/bucket=K file keep their names and bytes, no
+    segment is born, and the corpus reads treat the segment-less epoch as
+    an empty one — read_at(E) is the epoch E-1 corpus, diff(E-1, E) is
+    empty — before and after a compaction folds around it."""
+    import os
+
+    from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+        _last_applied_epoch,
+        compact_dedup_gate_corpus,
+        foreach_batch_dedup_gate,
+        read_dedup_gate_corpus_at,
+        read_dedup_gate_corpus_diff,
+    )
+
+    store = str(tmp_path / "gate")
+    sink = foreach_batch_dedup_gate(store, n_buckets=4)
+
+    def files(sub):
+        out = {}
+        for d, _, names in os.walk(f"{store}/{sub}"):
+            for name in names:
+                with open(os.path.join(d, name), "rb") as f:
+                    out[os.path.relpath(os.path.join(d, name), store)] = f.read()
+        return out
+
+    def ids_at(e):
+        return sorted(
+            r["doc_id"]
+            for r in read_dedup_gate_corpus_at(spark, store, e).collect()
+        )
+
+    def diff_ids(a, b):
+        return sorted(
+            r["doc_id"]
+            for r in read_dedup_gate_corpus_diff(spark, store, a, b).collect()
+        )
+
+    sink(_docs(spark, [(1, "alpha"), (2, "beta")]), 0)
+    sink(_docs(spark, [(3, "gamma"), (4, "ALPHA")]), 1)
+    before = files("accepted"), files("fps")
+    sink(_docs(spark, [(5, "Beta"), (6, "gamma  ")]), 2)  # all duplicates
+    assert (files("accepted"), files("fps")) == before
+    assert _last_applied_epoch(spark, store) == 2
+    assert ids_at(2) == ids_at(1) == [1, 2, 3]
+    assert diff_ids(1, 2) == []
+    assert diff_ids(0, 2) == [3]
+
+    # a compaction folds around the segment-less epoch 2
+    sink(_docs(spark, [(7, "delta")]), 3)
+    assert compact_dedup_gate_corpus(spark, store) == 2  # seg_0,1,3 -> 1
+    sink(_docs(spark, [(8, "DELTA")]), 4)  # all duplicates, above the fold
+    sink(_docs(spark, [(9, "eps")]), 5)
+    assert ids_at(3) == ids_at(4) == [1, 2, 3, 7]
+    assert ids_at(5) == [1, 2, 3, 7, 9]
+    assert diff_ids(3, 4) == [] and diff_ids(4, 5) == [9]
+    with pytest.raises(ValueError, match="time-travel horizon"):
+        ids_at(2)  # inside the fold
+
+
+def test_dedup_gate_compaction_never_folds_an_uncommitted_segment(
+    spark, tmp_path, monkeypatch
+):
+    """A gate epoch that crashed after installing its segment but before
+    its ledger is rewound by the next compaction before it folds, so the
+    replay republishes the epoch once: no doc is served twice."""
+    import s3_to_redshift_with_airflow_spark.streaming.pipeline as pl
+    from tests.crashfs import CrashNow, crash_at_ledger
+
+    store = str(tmp_path / "gate")
+    sink = pl.foreach_batch_dedup_gate(store, n_buckets=4)
+    ids = lambda: sorted(  # noqa: E731
+        r["doc_id"] for r in pl.read_dedup_gate_corpus(spark, store).collect()
+    )
+    sink(_docs(spark, [(1, "alpha")]), 0)
+    sink(_docs(spark, [(2, "beta")]), 1)
+    with crash_at_ledger(monkeypatch), pytest.raises(CrashNow):
+        sink(_docs(spark, [(3, "gamma")]), 2)
+    assert ids() == [1, 2, 3]  # installed, not committed
+    assert pl.compact_dedup_gate_corpus(spark, store) == 1
+    assert ids() == [1, 2]
+    sink(_docs(spark, [(3, "gamma")]), 2)  # the replay
+    assert ids() == [1, 2, 3]
+
+
 @pytest.mark.slow
 def test_dedup_gate_corpus_compaction(spark, tmp_path):
     """Folding the accepted segments bounds segment count while keeping
