@@ -3173,12 +3173,24 @@ def foreach_batch_dedup_gate(
     return _sink
 
 
+def _read_gate_segments(spark: SparkSession, segs_dir: str) -> DataFrame:
+    """Every `seg_*` dir under a gate's segment root, listed once on the
+    driver and read by explicit path. A glob read makes Spark probe the
+    literal glob path for a streaming-sink metadata dir, which fails and
+    logs a warning with a stack trace on every serve. A root with no
+    segment yet keeps the glob read, so it fails as it always has."""
+    names = [n for n in _live_segments(spark, segs_dir) if n.startswith("seg_")]
+    if not names:
+        return spark.read.parquet(f"{segs_dir}/seg_*")
+    return _read_segment_table(spark, segs_dir, None, names)
+
+
 def read_dedup_gate_corpus(spark: SparkSession, store_dir: str) -> DataFrame:
     """The deduped corpus the gate has accepted so far: the union of the
     live accepted/ segments (plan-level union, no shuffle; resolves a
     compaction-crash park)."""
     acc = _store_path(spark, store_dir.rstrip("/") + "/accepted")
-    return spark.read.parquet(f"{acc}/seg_*")
+    return _read_gate_segments(spark, acc)
 
 
 def read_dedup_gate_corpus_at(
@@ -3203,7 +3215,7 @@ def read_dedup_gate_corpus_at(
         raise ValueError(f"dedup gate store {store_dir!r} has no accepted corpus")
     names = _segments_in_range(spark, acc, _BEFORE_SEED, int(epoch))
     if not names:
-        return spark.read.parquet(f"{acc}/seg_*").limit(0)
+        return _read_gate_segments(spark, acc).limit(0)
     return _read_segment_table(spark, acc, None, names)
 
 
@@ -3227,7 +3239,7 @@ def read_dedup_gate_corpus_diff(
         raise ValueError(f"diff range is backwards: ({lo}, {hi}]")
     names = _segments_in_range(spark, acc, lo, hi)
     if not names:
-        return spark.read.parquet(f"{acc}/seg_*").limit(0)
+        return _read_gate_segments(spark, acc).limit(0)
     return _read_segment_table(spark, acc, None, names)
 
 
@@ -3444,7 +3456,7 @@ def read_neardup_gate_corpus(spark: SparkSession, store_dir: str) -> DataFrame:
     decision segments, filtered to the accepted flag."""
     root = store_dir.rstrip("/")
     return (
-        spark.read.parquet(f"{root}/decided/seg_*")
+        _read_gate_segments(spark, f"{root}/decided")
         .filter(F.col("accepted"))
         .drop("accepted")
     )

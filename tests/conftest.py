@@ -78,3 +78,12 @@ def run_in_job_group(spark):
         )
 
     return run
+
+
+@pytest.fixture
+def codegen_compilations(spark):
+    """count() -> generated classes this JVM has compiled so far. Spark's
+    CodegenMetrics records one compilation-time sample per Janino compile,
+    i.e. per miss of the generated-class cache; a hit records nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()

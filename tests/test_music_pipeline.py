@@ -12,6 +12,7 @@ import tempfile
 import pytest
 
 from s3_to_redshift_with_airflow_spark.pipelines.music_etl import run_pipeline
+from s3_to_redshift_with_airflow_spark.session import CODEGEN_CACHE_ENTRIES
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +71,35 @@ def _persisted(spark) -> set[int]:
     """Ids of the persisted RDDs. Compared as sets, since the context cleaner
     may unpersist earlier tests' garbage-collected frames meanwhile."""
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: SLF001
+
+
+def test_repeated_batch_reuses_generated_code(
+    spark, fixture_dir, codegen_compilations, tmp_path
+):
+    # Runs first in the module, so its first batch is the fixture's cold
+    # one (87-122 compiles, by what earlier tests left in the cache). The
+    # batch's working set (~125 classes) exceeds Spark's default cache of
+    # 100: at that size the LRU is scanned cyclically and the second batch
+    # recompiled 100-111 classes. With the engine's cache it recompiles
+    # 0-16: classes whose source differs between batches because Spark
+    # orders a distinct aggregate's groups, or numbers adaptive query
+    # stages, differently from run to run.
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    compiled = []
+    for out in ("first", "second"):
+        before = codegen_compilations()
+        run_pipeline(
+            spark,
+            fixture_dir["users"],
+            fixture_dir["songs"],
+            fixture_dir["streams"],
+            str(tmp_path / out),
+        )
+        compiled.append(codegen_compilations() - before)
+    first, second = compiled
+    assert second * 4 < first, compiled
 
 
 def test_pipeline_end_to_end(spark, run_in_job_group, fixture_dir):
