@@ -1260,8 +1260,8 @@ def q_streaming_ivf_pq_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (centroids, codebook) are trained on the standing corpus (vec_id ≥
     50), persisted FROZEN at the index root, and each streamed epoch's
     vectors are routed + encoded against them (two broadcast delta-only
-    scans) into one immutable (lists, codes) segment published by a
-    single rename — the segment dir is the ledger, per-epoch write cost
+    scans) into one immutable (lists, codes) segment committed with its
+    manifest under the index's ledger — per-epoch write cost
     is the delta's codes at ANY index size, and appended vectors are
     reachable by construction (search probes rank against the same
     frozen centroids the append routed by — reachability pinned in

@@ -3325,11 +3325,11 @@ _BM25_SEG_SEED: dict[str, str] = {}
 def q_streaming_bm25_maintain_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming_bm25_maintain with O(delta) per-epoch writes — the Lucene
     segment model on parquet (streaming.pipeline.
-    foreach_batch_bm25_maintain_segmented): each epoch publishes an
+    foreach_batch_bm25_maintain_segmented): each epoch commits an
     immutable segment dir holding only the delta's postings/doclens
-    (term-sorted within the segment), by ONE rename — no index rewrite,
-    no ledger artifact (the segment directory IS the ledger: presence ==
-    epoch applied), no window where a reader sees a partial index. The
+    (term-sorted within the segment) together with the manifest listing
+    it, under the index's ledger — no index rewrite, no window where a
+    reader sees a partial index. The
     serve path unions the segments and recomputes the 1-row stats with
     the build's exact integer formula, so the segmented serve is
     bit-identical to a monolithic rebuild — this row carries the same

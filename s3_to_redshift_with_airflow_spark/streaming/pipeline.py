@@ -269,13 +269,14 @@ def _recover_parked(spark: SparkSession, target_path: str) -> None:
     """Standalone restore for a directory parked at `target__prev` by a
     crash inside its two-rename swap window — the mutation twin of
     `_store_path`'s read-side resolution, for callers that are about to
-    WRITE under the directory (the segmented maintainers publish into
-    `segs/`; compaction counts its children): resolving the read path is
-    not enough there, because publishing into a freshly-created `segs/`
-    while the real one sits parked would leave two half-stores (ADVICE
-    r8 #1). If the target is absent and a park exists, the park moves
-    back; a leftover park alongside an existing target (crash after
-    install, before cleanup) is stale and is deleted."""
+    WRITE under the directory: the dedup gate's `accepted/` corpus (its
+    compaction swaps the whole dir) and the IVF-PQ index root (the
+    retrain swaps the whole root). Resolving the read path is not enough
+    there, because writing into a freshly-created directory while the
+    real one sits parked would leave two half-stores. If the target is
+    absent and a park exists, the park moves back; a leftover park
+    alongside an existing target (crash after install, before cleanup)
+    is stale and is deleted."""
     fs, P = _hadoop_fs(spark, target_path)
     tgt = P(target_path)
     prev = P(target_path.rstrip("/") + "__prev")
@@ -1035,53 +1036,73 @@ def read_bucketed_store_snapshot(spark: SparkSession, target_path: str) -> DataF
     `_epoch_commit` — the serve-during-maintain read (VERDICT r10 next
     #4): at every point of the commit's mutation sequence this resolves
     to the COMPLETE pre-epoch state or the complete post-epoch state,
-    never a cross-bucket mix.
-
-      - no journal, or journal value <= its marker: the epoch (if any)
-        COMMITTED — live bucket dirs are the post-state (every unit
-        installs before the marker, and park cleanup never touches live
-        dirs);
-      - journal value > marker: mid-mutation — serve the PRE-state: each
-        journal unit that existed pre-epoch reads its park if parked (no
-        park is deleted before the marker commits), else its untouched
-        live dir; units born this epoch are EXCLUDED; untouched buckets
-        serve live.
+    never a cross-bucket mix. Committed or idle, the live bucket dirs
+    are the store; mid-commit, each journal unit resolves to its
+    pre-epoch copy and untouched buckets serve live
+    (`_snapshot_resolver`).
 
     The plain `read_bucketed_store` remains the single-writer/idle read;
     this one is for readers racing a live maintainer. Enumerated at
     every fs-op prefix in tests/test_reader_interleaving.py."""
-    fs, P = _hadoop_fs(spark, target_path)
-    root = target_path.rstrip("/")
-    park = f"{root}__park"
-    journal = _read_journal(spark, park)
-    if journal is None or journal[1] <= _epoch_marker(
-        spark, f"{root}/{journal[0]}"
-    ):
+    units, resolve = _snapshot_resolver(spark, target_path)
+    if not units:
         return read_bucketed_store(spark, target_path)
-    units = dict(journal[2])
+    fs, P = _hadoop_fs(spark, target_path)
     live = {
         st.getPath().getName()
-        for st in fs.listStatus(P(root))
+        for st in fs.listStatus(P(target_path))
         if st.getPath().getName().startswith("bucket=")
     }
-    paths = []
-    for name in sorted(live | set(units)):
-        if name not in units:
-            paths.append(f"{root}/{name}")
-        elif units[name]:  # existed pre-epoch; born units are excluded
-            parked = f"{park}/{name}"
-            paths.append(parked if fs.exists(P(parked)) else f"{root}/{name}")
+    paths = [p for p in map(resolve, sorted(live | set(units))) if p is not None]
     # explicit-path reads drop the partition column, matching
     # read_bucketed_store's contract (layout column hidden)
     return spark.read.parquet(*paths)
 
 
-# --- epoch commit: the one crash protocol of every hash-bucketed store ----
+def _snapshot_resolver(spark: SparkSession, root: str):
+    """How a reader racing an `_epoch_commit` at `root` finds each unit:
+    `(units, resolve)`.
+
+      - no journal, or journal value <= its marker: the commit (if any)
+        COMMITTED — `units` is empty and every unit resolves to its live
+        path (every unit installs before the marker, and park cleanup
+        never touches live paths);
+      - journal value > marker: mid-apply — the reader serves the
+        PRE-state: `units` maps each journal unit to whether it existed
+        before the commit, and `resolve(unit)` gives its park if parked
+        (no park is deleted before the marker commits), else its
+        untouched live path, or None for a unit born in this commit.
+        Units outside the journal resolve live.
+
+    Driver-side metadata reads only; shared by the bucketed snapshot
+    read and the segment stores' serves (`_served_segments`)."""
+    fs, P = _hadoop_fs(spark, root)
+    root = root.rstrip("/")
+    park = f"{root}__park"
+    journal = _read_journal(spark, park)
+    units = {}
+    if journal is not None and journal[1] > _epoch_marker(
+        spark, f"{root}/{journal[0]}"
+    ):
+        units = dict(journal[2])
+
+    def resolve(unit: str) -> str | None:
+        if unit not in units:
+            return f"{root}/{unit}"
+        if not units[unit]:
+            return None
+        parked = f"{park}/{unit}"
+        return parked if fs.exists(P(parked)) else f"{root}/{unit}"
+
+    return units, resolve
+
+
+# --- epoch commit: the one crash protocol of every unit store -------------
 
 
 def _staged_dir(root: str) -> str:
-    """Where a bucketed-store maintainer stages an epoch's units for
-    `_epoch_commit` (swept by `_epoch_recover`)."""
+    """Where a maintainer stages an epoch's units for `_epoch_commit`
+    (swept by `_epoch_recover`)."""
     return root.rstrip("/") + "__staged"
 
 
@@ -1130,9 +1151,10 @@ def _epoch_commit(
     epoch: int,
     marker: str = "_ledger",
 ) -> None:
-    """Commit one epoch of a hash-bucketed store: replace each unit (a
-    path relative to `root`: `bucket=K`, `fps/bucket=K`,
-    `bucket=K/epoch=E`) with its staged copy under `_staged_dir(root)`,
+    """Commit one epoch of a unit store: replace each unit (a path
+    relative to `root` — a bucket dir `bucket=K`, `fps/bucket=K` or
+    `bucket=K/epoch=E`, a segment dir `segs/seg_E`, or a file such as
+    `segs/_manifest`) with its staged copy under `_staged_dir(root)`,
     or remove it when nothing was staged for it, and advance
     `root/<marker>` to `epoch` — all or nothing across crashes. The
     caller has written the staged units (the Spark work, during which
@@ -1177,7 +1199,7 @@ def _epoch_commit(
 
 def _epoch_recover(spark: SparkSession, root: str) -> None:
     """Settle whatever a crashed `_epoch_commit` left at `root`; every
-    bucketed sink runs this before its marker gate. With a journal whose
+    unit-store sink runs this before its marker gate. With a journal whose
     value is above its marker the epoch never committed: each unit is
     rewound (its park restored over any half-installed replacement; a
     unit born this epoch deleted, with any parent the deletion leaves
@@ -1415,58 +1437,46 @@ def _epoch_marker(spark: SparkSession, path: str) -> int:
     return -1 if lines is None else int(lines[0])
 
 
-def _manifest_segments(spark: SparkSession, segs_dir: str) -> list[str] | None:
-    """The manifest-listed live segment names, or None for a glob-mode
-    store (one without a `_manifest` — seeds write one; stores created
-    before it existed, or grown maintainer-first without a seed, serve
-    by directory listing until a compaction upgrades them). The manifest
-    is what makes PARTIAL (tiered) merges crash-safe: readers see only
-    listed segments, so a merged segment can be published invisibly and
-    revealed in the same atomic step that retires its constituents — no
-    window where both are served (the double-count window a dir-glob
-    reader cannot avoid). Lucene's segments_N file — one name per line."""
-    names = _read_sidecar(spark, _store_path(spark, f"{segs_dir}/_manifest"))
-    return None if names is None else sorted(names)
-
-
-def _write_manifest(spark: SparkSession, segs_dir: str, names: list[str]) -> None:
-    """Atomically install the manifest listing exactly `names` (two-
-    rename _install; `_manifest_segments` resolves a mid-swap park)."""
-    if not names:
-        raise ValueError("refusing to write an empty segment manifest")
-    tmp = f"{segs_dir}/__manifest_next"
-    _write_text_sidecar(spark, tmp, "\n".join(sorted(names)))
-    _install(spark, tmp, f"{segs_dir}/_manifest")
-
-
-def _manifest_add(spark: SparkSession, segs_dir: str, name: str) -> None:
-    """Add a just-published segment to the manifest. No-op for glob-mode
-    stores (presence IS visibility there) and for names already listed —
-    the idempotence the replay-repair path relies on."""
-    names = _manifest_segments(spark, segs_dir)
-    if names is None or name in names:
-        return
-    _write_manifest(spark, segs_dir, [*names, name])
-
-
-def _live_segments(spark: SparkSession, segs_dir: str) -> list[str]:
-    """Names of the live segments under `segs_dir`: the manifest list
-    when one exists (orphan dirs awaiting GC or replay-repair are NOT
-    live), else the directory listing (glob-mode store), skipping
-    hidden/scratch entries. Cost: one metadata read — O(segment count),
-    never O(index size)."""
-    names = _manifest_segments(spark, segs_dir)
+def _live_segments(
+    spark: SparkSession, segs_dir: str, manifest: str | None = None
+) -> list[str]:
+    """The segment names the store's manifest lists (`manifest`,
+    default `segs_dir/_manifest`) — the one catalog of a segment store,
+    Lucene's segments_N file, one name per line. Every commit installs
+    a segment and the manifest listing it together (`_epoch_commit`),
+    so a listed segment is complete and an unlisted dir is never read.
+    No `segs_dir` at all is an empty store ([]); segment dirs without a
+    manifest are the retired glob-mode layout and are refused. Cost: one
+    metadata read — O(segment count), never O(index size)."""
+    names = _read_sidecar(spark, manifest or f"{segs_dir}/_manifest")
     if names is not None:
-        return names
+        return sorted(names)
     fs, P = _hadoop_fs(spark, segs_dir)
-    d = P(segs_dir)
-    if not fs.exists(d):
-        return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(d)
-        if not st.getPath().getName().startswith(("_", "."))
-    )
+    if fs.exists(P(segs_dir)) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(P(segs_dir))
+    ):
+        raise _store_format_error(f"{segs_dir}/_manifest", "is missing")
+    return []
+
+
+def _served_segments(spark: SparkSession, root: str) -> list[str]:
+    """Paths of the segments a serve of the segment store at `root`
+    reads: the manifest's list, with the manifest and every segment it
+    lists resolved through the commit journal (`_snapshot_resolver`). A
+    serve racing an epoch's publish or a compaction therefore reads the
+    complete pre- or post-commit segment set — never a merged segment
+    beside its constituents, nor the new seg_base of a full merge beside
+    the segments it absorbed. Driver-side metadata only; a store with no
+    segment raises."""
+    root = root.rstrip("/")
+    resolve = _snapshot_resolver(spark, root)[1]
+    manifest = resolve("segs/_manifest")
+    names = [] if manifest is None else _live_segments(spark, f"{root}/segs", manifest)
+    paths = [p for p in (resolve(f"segs/{n}") for n in names) if p is not None]
+    if not paths:
+        raise ValueError(f"segment store {root!r} has no segments")
+    return paths
 
 
 _SEG_NAME_RE = None  # compiled lazily below
@@ -1485,32 +1495,45 @@ def _seg_epoch(name: str) -> int:
     return int(m.group(1)) if m else -1
 
 
-def _max_seg_epoch(names: list[str]) -> int:
-    """Largest epoch id among the names (-1 if only seg_base)."""
-    return max((_seg_epoch(n) for n in names), default=-1)
+def _settle_segment_store(spark: SparkSession, root: str) -> None:
+    """What every segment-store writer runs first: settle a crashed
+    commit (`_epoch_recover`). A `compaction_marker` or a `segs__prev`
+    park of the retired segment protocol is refused: that protocol kept
+    no ledger, so its merged-away epochs would replay."""
+    fs, P = _hadoop_fs(spark, root)
+    for retired in ("compaction_marker", "segs__prev"):
+        if fs.exists(P(f"{root}/{retired}")):
+            raise _store_format_error(
+                f"{root}/{retired}", "belongs to the retired segment protocol"
+            )
+    _epoch_recover(spark, root)
 
 
-def _compacted_through(spark: SparkSession, root: str) -> int:
-    """The store's max-compacted-epoch marker: every epoch at/below it is
-    guaranteed applied even though compaction merged its segment dir away.
-    Without this, segment-presence-as-ledger is DESTROYED by compaction:
-    an at-least-once replay of a merged-away epoch would miss the
-    presence probe, hit the disjointness guard (its ids ARE indexed), and
-    permanently fail the stream on an epoch that needs skipping, not
-    raising (ADVICE r8 #3). -1 when no compaction has run."""
-    return _epoch_marker(spark, f"{root}/compaction_marker")
-
-
-def _write_compaction_marker(spark: SparkSession, root: str, epoch: int) -> None:
-    tmp = f"{root}/__marker_epoch{int(epoch)}"
-    _write_text_sidecar(spark, tmp, str(int(epoch)))
-    _install(spark, tmp, f"{root}/compaction_marker")
+def _commit_segment(
+    spark: SparkSession, root: str, epoch_id: int, compact_every, compact
+) -> None:
+    """Publish the segment an epoch staged at
+    `_staged_dir(root)/segs/seg_<epoch>`: a new manifest listing it is
+    staged beside it, and ONE `_epoch_commit` under the root `_ledger`
+    installs both, the segment first — the epoch is wholly in the store
+    (and its replay skips on the ledger) or wholly out. A maintainer-
+    first store gets its manifest here. With `compact_every` set, a
+    tiered `compact(spark, root, tiered=True)` follows once the live
+    segment count reaches it."""
+    name = f"seg_{int(epoch_id)}"
+    live = sorted(_live_segments(spark, f"{root}/segs") + [name])
+    _write_text_sidecar(
+        spark, f"{_staged_dir(root)}/segs/_manifest", "\n".join(live)
+    )
+    _epoch_commit(spark, root, [f"segs/{name}", "segs/_manifest"], epoch_id)
+    if compact_every and len(live) >= compact_every:
+        compact(spark, root, tiered=True)
 
 
 def _write_covers(spark: SparkSession, seg_dir: str, epochs: list[int]) -> None:
     """Record the EXACT epoch set a segment folds as a `_covers` sidecar
     (a handful of epoch ids) inside the segment dir — the
-    catalog that makes time-travel reads (`_segments_as_of`, VERDICT r10
+    catalog that makes time-travel reads (`_segment_tables_as_of`, VERDICT r10
     next #6) exact under TIERED compaction, where the merge set need not
     be an epoch prefix (the size rule can exclude a mid-history segment,
     so a merged segment's name alone cannot say WHICH epochs it holds).
@@ -1531,67 +1554,66 @@ def _write_covers(spark: SparkSession, seg_dir: str, epochs: list[int]) -> None:
     )
 
 
-def _segment_covers(spark: SparkSession, segs_dir: str, name: str) -> list[int]:
-    """The sorted epochs a live segment folds: seg_<e> covers {e} by
-    name; every other segment (a seed's or retrain's seg_base, a merged
-    seg_m<e>) carries a `_covers` sidecar, and one without it is
+def _segment_covers(spark: SparkSession, seg_path: str) -> list[int]:
+    """The sorted epochs the segment at `seg_path` folds: seg_<e> covers
+    {e} by name; every other segment (a seed's or retrain's seg_base, a
+    merged seg_m<e>) carries a `_covers` sidecar, and one without it is
     refused."""
+    name = seg_path.rstrip("/").rsplit("/", 1)[-1]
     e = _seg_epoch(name)
     if e >= 0 and not name.startswith("seg_m"):
         return [e]
-    return sorted(
-        int(ln) for ln in _require_sidecar(spark, f"{segs_dir}/{name}/_covers")
-    )
+    return sorted(int(ln) for ln in _require_sidecar(spark, f"{seg_path}/_covers"))
 
 
 # read_at's lower bound: strictly below the seed's pre-stream epoch -1
 _BEFORE_SEED = -2
 
 
-def _segments_as_of(spark: SparkSession, root: str, epoch: int) -> list[str]:
-    """Resolve the live segment names that constitute the store AS OF
-    `epoch` — the time-travel catalog walk (VERDICT r10 next #6):
-    include every live segment whose covered epochs are all <= epoch
-    (the seed's pre-stream epoch is -1, so it is always in), drop those
-    entirely above, and RAISE when a segment folds epochs from both
-    sides of the cut — that epoch fell below the store's time-travel
-    horizon when compaction merged it, and serving the fold would
-    silently include future rows. Cost: one manifest read + one tiny
-    `_covers` read per merged segment — O(segment count) metadata,
-    never O(store bytes); the returned names drive the same plan-level
-    union scan the live read uses, so a time-travel serve is exactly a
-    live serve over fewer segments."""
-    segs = _store_path(spark, f"{root.rstrip('/')}/segs")
-    return _segments_in_range(spark, segs, _BEFORE_SEED, epoch)
+def _segment_tables_as_of(
+    spark: SparkSession, root: str, epoch: int, tables
+) -> tuple[list[str], list[DataFrame]]:
+    """The segment store at `root` AS OF `epoch` — the time-travel
+    catalog walk (VERDICT r10 next #6): the served segments whose
+    covered epochs are all <= epoch (`_segments_in_range`; the seed's
+    pre-stream epoch -1 is always in), and one scan per per-segment
+    table over them — typed but empty (schema from the live segments)
+    when nothing existed yet at `epoch`. Segments are immutable and
+    epoch-stamped, so a time-travel serve is exactly a live serve over
+    fewer segments; a fold straddling the cut raises."""
+    live = _served_segments(spark, root)
+    segs = _segments_in_range(spark, live, _BEFORE_SEED, epoch)
+    frames = [_read_segment_table(spark, segs or live, t) for t in tables]
+    return segs, [f if segs else f.limit(0) for f in frames]
 
 
 def _segments_in_range(
-    spark: SparkSession, segs_dir: str, lo: int, hi: int
+    spark: SparkSession, seg_paths: list[str], lo: int, hi: int
 ) -> list[str]:
-    """Live segment names whose covered epochs fall entirely in
-    (lo, hi] — the shared catalog walk behind read_at (lo below the
-    seed) and the snapshot diffs: a segment entirely at/below `lo` or
-    entirely above `hi` is skipped; one straddling either boundary
-    means the requested cut fell below a fold's horizon, and the walk
-    raises rather than serve merged history. Coverage resolves
-    driver-side (`_segment_covers`: names, plus one text read per merged
-    segment) — no Spark job."""
+    """The segment paths whose covered epochs fall entirely in (lo, hi]
+    — the shared catalog walk behind read_at (lo below the seed) and the
+    snapshot diffs: a segment entirely at/below `lo` or entirely above
+    `hi` is skipped; one straddling either boundary means the requested
+    cut fell below a fold's horizon, and the walk raises rather than
+    serve merged history. Coverage resolves driver-side
+    (`_segment_covers`: names, plus one text read per merged segment) —
+    no Spark job."""
     lo, hi = int(lo), int(hi)
     out = []
-    for n in _live_segments(spark, segs_dir):
-        eps = _segment_covers(spark, segs_dir, n)
+    for p in seg_paths:
+        eps = _segment_covers(spark, p)
         mn, mx = eps[0], eps[-1]
         if mx <= lo or mn > hi:
             continue
         elif mn > lo and mx <= hi:
-            out.append(n)
+            out.append(p)
         else:
             shown_lo = "-inf" if lo == _BEFORE_SEED else str(lo)
             raise ValueError(
                 f"epoch range ({shown_lo}, {hi}] is below this store's "
-                f"time-travel horizon: live segment {n!r} folds epochs "
-                f"spanning [{mn}, {mx}] across the requested cut; "
-                f"earliest servable epoch here is {mx}"
+                f"time-travel horizon: live segment {p.rsplit('/', 1)[-1]!r} "
+                f"folds epochs spanning [{mn}, {mx}] across the requested "
+                f"cut; earliest servable epoch here is {mx}"
             )
     return out
 
@@ -1658,14 +1680,12 @@ def _write_bm25_seg_stats(
     _write_text_sidecar(spark, f"{seg_dir}/_stats", f"{int(n_docs)},{int(sum_len)}")
 
 
-def _read_bm25_seg_stats(
-    spark: SparkSession, segs_dir: str, names: list[str]
-) -> tuple[int, int]:
-    """(total n_docs, total sum_len) summed from every named segment's
+def _read_bm25_seg_stats(spark: SparkSession, seg_paths: list[str]) -> tuple[int, int]:
+    """(total n_docs, total sum_len) summed from every listed segment's
     `_stats` sidecar. Driver-side text reads only; no Spark job."""
     n_tot, sum_tot = 0, 0
-    for n in names:
-        a, b = _require_sidecar(spark, f"{segs_dir}/{n}/_stats")[0].split(",")
+    for p in seg_paths:
+        a, b = _require_sidecar(spark, f"{p}/_stats")[0].split(",")
         n_tot += int(a)
         sum_tot += int(b)
     return n_tot, sum_tot
@@ -1935,7 +1955,9 @@ def _refresh_segment_summary(
             covers = _read_summary_smeta(spark, path)[1]
         if covers == set(live):
             return  # already fresh
-    ids = _read_segment_table(spark, segs_dir, table_name, live).select(id_col)
+    ids = _read_segment_table(
+        spark, [f"{segs_dir}/{n}" for n in live], table_name
+    ).select(id_col)
     _write_segment_summary(spark, segs_dir, ids, id_col, live)
 
 
@@ -2030,8 +2052,7 @@ def _bloom_suspect_segments(
     names = _live_segments(spark, segs_dir)
     if not names:
         return []  # empty store: trivially disjoint
-    # explicit per-name paths, not a glob: a manifest store may hold
-    # orphan dirs (merged away, GC pending) whose bitmaps must not probe
+    # explicit per-name paths: only the manifest's segments probe
     paths = [f"{segs_dir}/{n}/idbloom" for n in names]
     for p in paths:
         if not fs.exists(P(p)):
@@ -2095,138 +2116,81 @@ def _bloom_suspect_segments(
     return sorted(r["__seg"] for r in hits)
 
 
-def _segment_replay_applied(
-    spark: SparkSession, root: str, epoch_id: int, fs, P
-) -> bool:
-    """The segmented stores' replay gate: epoch applied iff it is
-    at/below the compaction marker (segment merged away — still applied)
-    OR its segment dir exists. Marker FIRST: a merged-away orphan dir
-    awaiting GC must not be repaired back into the manifest. A dir that
-    exists above the marker gets `_manifest_add` — the repair for a
-    crash between segment publish and manifest commit (the re-delivered
-    epoch makes the already-published segment visible instead of
-    re-writing it; segment content is deterministic, so the dir is
-    complete). No-op on glob-mode stores."""
-    if epoch_id <= _compacted_through(spark, root):
-        return True
-    seg_name = f"seg_{int(epoch_id)}"
-    if fs.exists(P(f"{root}/segs/{seg_name}")):
-        _manifest_add(spark, f"{root}/segs", seg_name)
-        return True
-    return False
-
-
-def _gc_orphan_segments(spark: SparkSession, root: str) -> None:
-    """Delete segment dirs a crashed PARTIAL compaction left behind —
-    present on disk but not in the manifest: constituents whose delete
-    step didn't finish (their epochs are ≤ the marker, written first) and
-    merged seg_m dirs published before the manifest swap crashed. A
-    seg_<e> dir with e ABOVE the marker is NOT garbage — it is a
-    published epoch awaiting the replay repair (`_segment_replay_applied`
-    re-lists it) — and stays. Glob-mode stores have no manifest and no
-    orphans (their only compaction is the whole-dir swap)."""
-    segs_dir = f"{root}/segs"
-    manifest = _manifest_segments(spark, segs_dir)
-    if manifest is None:
-        return
-    fs, P = _hadoop_fs(spark, segs_dir)
-    d = P(segs_dir)
-    if not fs.exists(d):
-        return
-    mark = _compacted_through(spark, root)
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")) or name in manifest:
-            continue
-        ep = _seg_epoch(name)
-        if name.startswith("seg_m") or (0 <= ep <= mark):
-            fs.delete(st.getPath(), True)
-
-
 def _compact_segment_store(
     spark: SparkSession, root: str, write_merged, tiered: bool = False
 ) -> int:
-    """The shared compaction protocol. Two modes:
+    """The shared compaction of the segment stores. Two modes:
 
-    ALL-MERGE (default; the only mode for glob stores): every live
-    segment merges into one seg_base, fully materialized at a scratch
-    dir by `write_merged(tmp, names, "seg_base")` together with a fresh
-    one-line manifest, then the WHOLE `segs/` dir swaps via the
-    two-rename install — readers see the old set or the compacted one,
-    never a mixture, and a glob-mode store is UPGRADED to manifest mode
-    by the swap.
+    FULL (default): every live segment merges into seg_base, which the
+    merge replaces in place (or creates, on a store grown maintainer-
+    first).
 
-    TIERED (manifest stores; what the maintainers' auto-trigger uses):
-    the size-tiered merge policy — segments holding more than half the
-    store's bytes are EXCLUDED (the giant seg_base is never rewritten to
-    absorb a day of epochs), the rest merge into one seg_m<maxepoch>
-    published INVISIBLY (not yet in the manifest), revealed and retired
-    in ONE atomic manifest swap, constituents deleted after. Amortized
-    per-epoch compaction cost is O(delta · tiers), not the all-merge's
+    TIERED (what the maintainers' auto-trigger uses): the size-tiered
+    merge policy — segments holding more than half the store's bytes
+    are EXCLUDED (the giant seg_base is never rewritten to absorb a day
+    of epochs), the rest merge into one new seg_m<maxepoch>. Amortized
+    per-epoch compaction cost is O(delta · tiers), not the full merge's
     O(index/trigger-interval); when the merged tier grows comparable to
     the base, the >half rule stops excluding it and the policy
     escalates to a natural full merge.
 
-    Crash safety in both modes: recover a parked `segs/` first (ADVICE
-    r8 #1), GC manifest orphans, and advance the max-compacted-epoch
-    marker BEFORE any visible mutation — a crash leaves either the old
-    manifest (constituents still listed and live; the invisible merged
-    dir is ≤-marker garbage, GC'd next time) or the new one (orphan
-    constituents ≤ marker, GC'd next time); replays of merged-away
-    epochs skip on the marker either way (ADVICE r8 #3). The reverse
-    order would leave merged-away epochs unrecognized — the
-    stream-killer.
+    `write_merged(out, seg_paths)` writes the merged segment at `out`
+    from the live segments at `seg_paths`. It is staged under
+    `_staged_dir(root)` with the new manifest, and ONE `_epoch_commit`
+    installs the compaction, its units in order: the merged segment,
+    the manifest, the removed constituents — and, in a full merge, the
+    store-wide `_summary`, whose covers name the seg_base being
+    replaced (the caller rebuilds it). The commit's marker is
+    `_compactions`, which rises by one per compaction: keyed on the
+    ledger, a full merge after a tiered merge at the same ledger could
+    not be told from a finished one. A crash rewinds to the
+    pre-compaction store, serves resolve a commit caught mid-apply
+    through its journal (`_served_segments`), and replays of
+    merged-away epochs skip on the ledger.
 
     Returns the number of segments merged away (0 = nothing to do)."""
-    segs_dir = f"{root}/segs"
-    _recover_parked(spark, segs_dir)
-    fs, P = _hadoop_fs(spark, segs_dir)
-    _gc_orphan_segments(spark, root)
-    manifest = _manifest_segments(spark, segs_dir)
-    names = manifest if manifest is not None else _live_segments(spark, segs_dir)
+    root = root.rstrip("/")
+    _settle_segment_store(spark, root)
+    segs = f"{root}/segs"
+    names = _live_segments(spark, segs)
     if len(names) <= 1:
         return 0
-    if tiered and manifest is not None:
-        sizes = {n: _path_bytes(spark, f"{segs_dir}/{n}") for n in names}
+    merge_set = names
+    if tiered:
+        sizes = {n: _path_bytes(spark, f"{segs}/{n}") for n in names}
         total = sum(sizes.values())
-        merge_set = sorted(n for n in names if sizes[n] * 2 <= total)
+        merge_set = [n for n in names if sizes[n] * 2 <= total]
         if len(merge_set) <= 1:
             return 0  # one small segment at most: nothing worth merging
-    else:
-        merge_set = list(names)
-    # union the merge set's exact epoch coverage BEFORE any mutation —
-    # the merged segment's `_covers` sidecar is what keeps time-travel
-    # reads exact for still-cataloged epochs after this merge (VERDICT
-    # r10 #6)
-    covers = [e for n in merge_set for e in _segment_covers(spark, segs_dir, n)]
-    new_mark = max(_compacted_through(spark, root), _max_seg_epoch(names))
-    if new_mark >= 0:
-        _write_compaction_marker(spark, root, new_mark)
-    tmp = f"{root}/__compacting_segs"
-    if fs.exists(P(tmp)):
-        fs.delete(P(tmp), True)
+    fs, P = _hadoop_fs(spark, root)
     if len(merge_set) == len(names):
-        # full merge: whole-dir swap (upgrades glob stores to manifest mode)
-        write_merged(tmp, list(names), "seg_base")
-        _write_covers(spark, f"{tmp}/seg_base", covers)
-        _write_text_sidecar(spark, f"{tmp}/_manifest", "seg_base")
-        _install(spark, tmp, segs_dir)
-        return len(names) - 1
-    # partial merge: publish invisibly, reveal+retire in one manifest swap
-    top = max(_seg_epoch(n) for n in merge_set)
-    out_name = f"seg_m{top}"
-    gen = 1
-    while out_name in names:  # never collide with a live segment
-        gen += 1
-        out_name = f"seg_m{top}_{gen}"
-    write_merged(tmp, merge_set, out_name)
-    _write_covers(spark, f"{tmp}/{out_name}", covers)
-    _rename_or_raise(fs, P(f"{tmp}/{out_name}"), P(f"{segs_dir}/{out_name}"))
-    survivors = sorted(set(names) - set(merge_set)) + [out_name]
-    _write_manifest(spark, segs_dir, survivors)
-    for n in merge_set:
-        fs.delete(P(f"{segs_dir}/{n}"), True)
-    fs.delete(P(tmp), True)
+        out_name = "seg_base"
+        dropped = [
+            u
+            for u in ("segs/_summary", "segs/_summary__prev")
+            if fs.exists(P(f"{root}/{u}"))
+        ]
+    else:
+        top = max(_seg_epoch(n) for n in merge_set)
+        out_name, gen, dropped = f"seg_m{top}", 1, []
+        while out_name in names:  # never collide with a live segment
+            gen += 1
+            out_name = f"seg_m{top}_{gen}"
+    staged = f"{_staged_dir(root)}/segs"
+    write_merged(f"{staged}/{out_name}", [f"{segs}/{n}" for n in merge_set])
+    # the merged segment's exact epoch coverage keeps time-travel reads
+    # exact for still-cataloged epochs (VERDICT r10 #6)
+    _write_covers(
+        spark,
+        f"{staged}/{out_name}",
+        [e for n in merge_set for e in _segment_covers(spark, f"{segs}/{n}")],
+    )
+    survivors = sorted(set(names) - set(merge_set) | {out_name})
+    _write_text_sidecar(spark, f"{staged}/_manifest", "\n".join(survivors))
+    removed = [f"segs/{n}" for n in merge_set if n != out_name]
+    units = [f"segs/{out_name}", "segs/_manifest", *removed, *dropped]
+    rank = _epoch_marker(spark, f"{root}/_compactions") + 1
+    _epoch_commit(spark, root, units, rank, marker="_compactions")
     return len(merge_set) - 1
 
 
@@ -2273,18 +2237,15 @@ def foreach_batch_bm25_maintain_segmented(
     bounded by `compact_bm25_segments` (the search-engine merge policy),
     auto-triggered every `compact_every` live segments when set.
 
-    Crash model — simpler than the ledger consumers because segments are
-    immutable: the segment is fully written at a scratch path, published
-    by ONE rename, and made reader-visible by the manifest commit
-    (`_manifest_add`; seeds create the manifest, maintainer-first stores
-    without one serve by directory glob). A reader never sees a partial
-    segment; a crash between publish and manifest commit is repaired by
-    the epoch's at-least-once re-delivery (the gate re-lists the complete
-    dir instead of re-writing it). THE SEGMENT DIRECTORY IS THE LEDGER:
-    `seg_N` existing == epoch N applied — and, post-compaction, the
-    max-compacted-epoch marker extends the claim to merged-away
-    segments (ADVICE r8 #3), so an at-least-once replay is skipped in
-    every lifetime.
+    Crash model — the unit stores' `_epoch_commit`: the segment is
+    fully written under `_staged_dir(root)`, then ONE commit under the
+    root `_ledger` installs it with the new `segs/_manifest` listing it
+    (`_commit_segment`; seeds create the manifest, a maintainer-first
+    store gets it from its first epoch). A crash anywhere rewinds to the
+    pre-epoch store, a serve racing the commit reads the pre- or the
+    post-epoch segment set (`_served_segments`), and an at-least-once
+    replay skips on the ledger — also after compaction merged its
+    segment away.
 
     The per-epoch disjointness probe is O(delta) in steady state, not
     O(index): each segment ships an id Bloom bitmap sized to its own
@@ -2294,7 +2255,7 @@ def foreach_batch_bm25_maintain_segmented(
     positive) pays the exact semi-join against ONLY the suspect
     segments, not the union scan that used to run every epoch (VERDICT
     r8 next-round #1). Id reuse across distinct epochs — the failure
-    presence-probes cannot see — still raises, through suspect-hit →
+    the ledger cannot see — still raises, through suspect-hit →
     exact-confirm."""
     from ..functions.text import tokens as _tok
     from ..operators.retrieval import bm25_index_build
@@ -2302,13 +2263,9 @@ def foreach_batch_bm25_maintain_segmented(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         root = index_dir.rstrip("/")
-        # a crash inside a compaction's swap window parks segs/ whole;
-        # restore BEFORE probing or publishing (publishing into a fresh
-        # segs/ while the real one is parked would fork the store)
-        _recover_parked(spark, f"{root}/segs")
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
-            return  # at-least-once replay: live segment or compacted away
+        _settle_segment_store(spark, root)
+        if epoch_id <= _last_applied_epoch(spark, root):
+            return  # at-least-once replay of a committed epoch
         # ONE delta aggregate replaces the separate isEmpty probe, the
         # bloom tier-1 min/max job, the bloom-sizing count, and the
         # `_stats` sidecar's sum(len) — guide §2.4, remove whole jobs
@@ -2324,7 +2281,7 @@ def foreach_batch_bm25_maintain_segmented(
         if n_delta == 0:
             return  # empty epoch: no segment, nothing to publish
         delta_ids = batch_df.select(F.col(id_col).alias("doc_id")).distinct()
-        segs = _store_path(spark, f"{root}/segs")
+        segs = f"{root}/segs"
         suspects = _bloom_suspect_segments(
             spark, segs, delta_ids, "doc_id", delta_range=(d["lo"], d["hi"])
         )
@@ -2346,7 +2303,7 @@ def foreach_batch_bm25_maintain_segmented(
                     "index"
                 )
         p_new, l_new, _ = bm25_index_build(batch_df, id_col, text_col)
-        tmp = f"{root}/__seg_epoch{int(epoch_id)}"
+        tmp = f"{_staged_dir(root)}/segs/seg_{int(epoch_id)}"
         _write_sorted_postings(p_new, f"{tmp}/postings", n_delta)
         l_new.write.mode("overwrite").parquet(f"{tmp}/doclens")
         # bloom over the doclens projection: doc_id-only, so column
@@ -2356,39 +2313,28 @@ def foreach_batch_bm25_maintain_segmented(
             l_new, "doc_id", tmp, stats=(n_delta, d["lo"], d["hi"])
         )
         _write_bm25_seg_stats(spark, tmp, n_delta, int(d["sl"] or 0))
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            # tiered: the giant base is never rewritten to absorb a few
-            # epochs — amortized O(delta · tiers), not O(index/interval)
-            compact_bm25_segments(spark, index_dir, tiered=True)
+        _commit_segment(spark, root, epoch_id, compact_every, compact_bm25_segments)
 
     return _sink
 
 
 def read_bm25_index_segmented(spark: SparkSession, index_dir: str):
     """(postings, doclens, stats) over the UNION of live segments. The
-    glob read plans one scan per segment (plan-level union, no shuffle);
-    term probes prune row groups per segment exactly as on the monolithic
-    layout. The 1-row stats come from the DRIVER-side sum of every live
-    segment's `_stats` sidecar (`_bm25_stats_df`: bm25_index_build's
-    exact integer formula, sum(len) div count, on the same totals —
-    round 12, VERDICT r11 next #2, replacing a per-serve union-aggregate
-    job over all doclens), so the segmented serve is bit-identical to a
-    monolithic rebuild — which is why the segmented consumer's registry
-    row carries the same full-corpus oracle. The segment names resolve
-    ONCE (one manifest read feeds both table scans and the stats)."""
-    root = index_dir.rstrip("/")
-    # _store_path: a crash inside a compaction's swap window parks segs/
-    # whole at segs__prev — serve from the park rather than raising
-    # PATH_NOT_FOUND until manual repair (ADVICE r8 #1)
-    segs = _store_path(spark, f"{root}/segs")
-    names = _live_segments(spark, segs) or None
-    postings = _read_segment_table(spark, segs, "postings", names)
-    doclens = _read_segment_table(spark, segs, "doclens", names)
-    stats = _bm25_stats_df(spark, *_read_bm25_seg_stats(spark, segs, names or []))
+    explicit-path read plans one scan per segment (plan-level union, no
+    shuffle); term probes prune row groups per segment exactly as on the
+    monolithic layout. The 1-row stats come from the DRIVER-side sum of
+    every live segment's `_stats` sidecar (`_bm25_stats_df`:
+    bm25_index_build's exact integer formula, sum(len) div count, on the
+    same totals — round 12, VERDICT r11 next #2, replacing a per-serve
+    union-aggregate job over all doclens), so the segmented serve is
+    bit-identical to a monolithic rebuild — which is why the segmented
+    consumer's registry row carries the same full-corpus oracle. The
+    segments resolve ONCE (`_served_segments`: one manifest read feeds
+    both table scans and the stats)."""
+    segs = _served_segments(spark, index_dir)
+    postings = _read_segment_table(spark, segs, "postings")
+    doclens = _read_segment_table(spark, segs, "doclens")
+    stats = _bm25_stats_df(spark, *_read_bm25_seg_stats(spark, segs))
     return postings, doclens, stats
 
 
@@ -2401,21 +2347,16 @@ def read_bm25_index_segmented_at(spark: SparkSession, index_dir: str, epoch: int
     `_stats` with the build's exact integer formula. Serve is therefore
     bit-equal to a batch bm25_index_build over the corpus as of `epoch`,
     while later epochs stay live in the store (the full read still sees
-    them). Epochs folded away by compaction raise (`_segments_as_of`);
-    still-cataloged epochs stay exact after tiered merges via the merged
-    segment's `_covers` sidecar. The reproducible-training-snapshot read
-    an LLM-data pipeline audits against."""
-    root = index_dir.rstrip("/")
-    segs = _store_path(spark, f"{root}/segs")
-    names = _segments_as_of(spark, root, epoch)
-    if names:
-        postings = _read_segment_table(spark, segs, "postings", names)
-        doclens = _read_segment_table(spark, segs, "doclens", names)
-    else:  # nothing existed yet at `epoch`: typed empty index
-        postings = _read_segment_table(spark, segs, "postings").limit(0)
-        doclens = _read_segment_table(spark, segs, "doclens").limit(0)
+    them). Epochs folded away by compaction raise
+    (`_segment_tables_as_of`); still-cataloged epochs stay exact after
+    tiered merges via the merged segment's `_covers` sidecar. The
+    reproducible-training-snapshot read an LLM-data pipeline audits
+    against."""
+    segs, (postings, doclens) = _segment_tables_as_of(
+        spark, index_dir, epoch, ("postings", "doclens")
+    )
     # prefix stats: the named segments' `_stats` sidecars, no Spark job
-    stats = _bm25_stats_df(spark, *_read_bm25_seg_stats(spark, segs, names))
+    stats = _bm25_stats_df(spark, *_read_bm25_seg_stats(spark, segs))
     return postings, doclens, stats
 
 
@@ -2432,14 +2373,9 @@ def read_ivf_pq_index_segmented_at(
     construction, so time travel across a retrain is out of scope (read
     the retired root if it was archived)."""
     root = _store_path(spark, index_dir.rstrip("/"))
-    segs = _store_path(spark, f"{root}/segs")
-    names = _segments_as_of(spark, root, epoch)
-    if names:
-        lists = _read_segment_table(spark, segs, "lists", names)
-        codes = _read_segment_table(spark, segs, "codes", names)
-    else:
-        lists = _read_segment_table(spark, segs, "lists").limit(0)
-        codes = _read_segment_table(spark, segs, "codes").limit(0)
+    _, (lists, codes) = _segment_tables_as_of(
+        spark, root, epoch, ("lists", "codes")
+    )
     return {
         "centroids": spark.read.parquet(f"{root}/centroids"),
         "codebook": spark.read.parquet(f"{root}/codebook"),
@@ -2457,28 +2393,20 @@ def read_join_view_segments_at(
     epochs <= `epoch` only, with later epochs still live in the store.
     Folded-away epochs raise; still-cataloged epochs survive tiered
     compaction exactly (`_covers`)."""
-    root = view_dir.rstrip("/")
-    segs = _store_path(spark, f"{root}/segs")
-    names = _segments_as_of(spark, root, epoch)
-    if not names:
-        return _read_segment_table(spark, segs, None).limit(0)
-    return _read_segment_table(spark, segs, None, names)
+    return _segment_tables_as_of(spark, view_dir, epoch, (None,))[1][0]
 
 
 def _read_segment_table(
-    spark: SparkSession, segs_dir: str, table: str | None, names: list[str] | None = None
+    spark: SparkSession, seg_paths: list[str], table: str | None
 ) -> DataFrame:
-    """One scan over a per-segment table across the live segments: the
-    manifest-listed set when the store has one (orphans excluded — the
-    no-double-count contract), the directory glob otherwise. `table` is
-    the subdir inside each segment (None for flat segment dirs); `names`
-    narrows to a subset (compaction's merge set)."""
-    if names is None:
-        names = _manifest_segments(spark, segs_dir)
+    """One scan over a per-segment table across the segments at
+    `seg_paths` (plan-level union, no shuffle); `table` is the subdir
+    inside each segment (None for flat segment dirs). Explicit paths,
+    never a glob: a glob read makes Spark probe the literal glob path
+    for a streaming-sink metadata dir, which fails and logs a warning
+    with a stack trace on every serve."""
     sub = f"/{table}" if table else ""
-    if names is None:
-        return spark.read.parquet(f"{segs_dir}/*{sub}")
-    return spark.read.parquet(*[f"{segs_dir}/{n}{sub}" for n in names])
+    return spark.read.parquet(*[f"{p}{sub}" for p in seg_paths])
 
 
 def seed_bm25_index_segmented(docs: DataFrame, index_dir: str) -> None:
@@ -2516,7 +2444,7 @@ def seed_bm25_index_segmented(docs: DataFrame, index_dir: str) -> None:
         spark, f"{root}/segs/seg_base", int(row["n"]), int(row["sl"] or 0)
     )
     _write_covers(spark, f"{root}/segs/seg_base", [-1])
-    _write_manifest(spark, f"{root}/segs", ["seg_base"])
+    _write_text_sidecar(spark, f"{root}/segs/_manifest", "seg_base")
     _write_segment_summary(
         spark,
         f"{root}/segs",
@@ -2530,7 +2458,7 @@ def compact_bm25_segments(
     spark: SparkSession, index_dir: str, tiered: bool = False
 ) -> int:
     """BM25 segment compaction under `_compact_segment_store`'s
-    crash-safe protocol (all-merge by default; `tiered=True` applies the
+    one-commit protocol (full merge by default; `tiered=True` applies the
     size-tiered policy that never rewrites the giant base). The merged
     segment keeps the globally-sorted postings layout and rebuilds its
     id bitmap from the merged doclens. Serve results are bit-identical
@@ -2538,17 +2466,15 @@ def compact_bm25_segments(
     from the same doclens). Returns the number of segments merged
     away."""
     root = index_dir.rstrip("/")
-    segs = f"{root}/segs"
 
-    def write_merged(tmp: str, names: list[str], out_name: str) -> None:
-        postings = _read_segment_table(spark, segs, "postings", names)
-        doclens = _read_segment_table(spark, segs, "doclens", names)
+    def write_merged(out: str, seg_paths: list[str]) -> None:
         # doclens first: its aggregate sizes the bloom, the `_stats`
         # sidecar AND the merged postings layout (small merges take the
         # one-sorted-file path; corpus-sized merges keep the range
         # shuffle — same data-bounded rule as the per-epoch publisher)
-        doclens.write.mode("overwrite").parquet(f"{tmp}/{out_name}/doclens")
-        l_back = spark.read.parquet(f"{tmp}/{out_name}/doclens")
+        doclens = _read_segment_table(spark, seg_paths, "doclens")
+        doclens.write.mode("overwrite").parquet(f"{out}/doclens")
+        l_back = spark.read.parquet(f"{out}/doclens")
         row = l_back.agg(
             F.count(F.lit(1)).alias("n"),
             F.min("doc_id").alias("lo"),
@@ -2556,25 +2482,22 @@ def compact_bm25_segments(
             F.sum("len").alias("sl"),
         ).collect()[0]
         _write_segment_bloom(
-            l_back,
-            "doc_id",
-            f"{tmp}/{out_name}",
-            stats=(int(row["n"]), row["lo"], row["hi"]),
+            l_back, "doc_id", out, stats=(int(row["n"]), row["lo"], row["hi"])
         )
         # the merged segment's `_stats` is the exact sum of its
         # constituents' doclens — serve stats stay sidecar-resolved
         # across compactions
-        _write_bm25_seg_stats(
-            spark, f"{tmp}/{out_name}", int(row["n"]), int(row["sl"] or 0)
-        )
+        _write_bm25_seg_stats(spark, out, int(row["n"]), int(row["sl"] or 0))
         _write_sorted_postings(
-            postings, f"{tmp}/{out_name}/postings", int(row["n"])
+            _read_segment_table(spark, seg_paths, "postings"),
+            f"{out}/postings",
+            int(row["n"]),
         )
 
     merged = _compact_segment_store(spark, root, write_merged, tiered=tiered)
     # refresh the store-wide coarse filter over the live set (VERDICT r9
     # #5) — merging or not, the compaction trigger is the refresh cadence
-    _refresh_segment_summary(spark, segs, "doclens", "doc_id")
+    _refresh_segment_summary(spark, f"{root}/segs", "doclens", "doc_id")
     return merged
 
 
@@ -2651,7 +2574,7 @@ def seed_ivf_pq_index_segmented(
         f"{root}/segs/seg_base",
     )
     _write_covers(emb.sparkSession, f"{root}/segs/seg_base", [-1])
-    _write_manifest(emb.sparkSession, f"{root}/segs", ["seg_base"])
+    _write_text_sidecar(emb.sparkSession, f"{root}/segs/_manifest", "seg_base")
     _write_segment_summary(
         emb.sparkSession,
         f"{root}/segs",
@@ -2671,11 +2594,10 @@ def read_ivf_pq_index_segmented(
     monolithic index — probes rank against the same frozen centroids the
     appends routed by, so appended vectors are reachable by
     construction."""
-    # outer _store_path: a crash inside ivf_pq_index_retrain's whole-root
-    # swap parks the ENTIRE index at root__prev; inner: a crash inside a
-    # compaction's segs/ swap parks just the segment dir (ADVICE r8 #1)
+    # _store_path: a crash inside ivf_pq_index_retrain's whole-root swap
+    # parks the ENTIRE index at root__prev
     root = _store_path(spark, index_dir.rstrip("/"))
-    segs = _store_path(spark, f"{root}/segs")
+    segs = _served_segments(spark, root)
     return {
         "centroids": spark.read.parquet(f"{root}/centroids"),
         "codebook": spark.read.parquet(f"{root}/codebook"),
@@ -2697,12 +2619,12 @@ def foreach_batch_ivf_pq_maintain_segmented(
     frozen-quantizer append seam (operators/clustering.
     ivf_pq_index_append: route new vectors by the training argmin against
     the FROZEN centroid table, encode against the FROZEN codebook — two
-    broadcast scans of the delta only) with the segment publish protocol
-    of foreach_batch_bm25_maintain_segmented: each epoch's (lists, codes)
-    delta lands as one immutable segment dir installed by a single
-    rename; the segment directory IS the ledger (presence == epoch
-    applied); the quantizer tables never move, so there is nothing to
-    swap atomically WITH — per-epoch write cost is exactly the delta's 8
+    broadcast scans of the delta only) with the segment commit of
+    foreach_batch_bm25_maintain_segmented: each epoch's (lists, codes)
+    delta is staged as one immutable segment dir and committed with the
+    manifest listing it under the root `_ledger` (`_commit_segment`),
+    which skips replays; the quantizer tables never move, so they are
+    no unit of the commit — per-epoch write cost is exactly the delta's 8
     bytes/vector of codes plus its list assignments, at ANY index size.
 
     Frozen-quantizer caveat (same as the batch append): appended vectors
@@ -2715,10 +2637,9 @@ def foreach_batch_ivf_pq_maintain_segmented(
         spark = batch_df.sparkSession
         root = index_dir.rstrip("/")
         _recover_parked(spark, root)  # retrain's whole-root swap park
-        _recover_parked(spark, f"{root}/segs")  # compaction-crash park
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
-            return  # replay: live segment or compacted away
+        _settle_segment_store(spark, root)
+        if epoch_id <= _last_applied_epoch(spark, root):
+            return  # at-least-once replay of a committed epoch
         # ONE delta aggregate replaces the separate isEmpty probe, the
         # bloom tier-1 min/max job, and the bloom-sizing count (guide
         # §2.4); the quantizer tables are read lazily below only when
@@ -2733,7 +2654,7 @@ def foreach_batch_ivf_pq_maintain_segmented(
         if n_delta == 0:
             return
         delta_ids = batch_df.select(F.col(id_col).alias("vec_id")).distinct()
-        segs = _store_path(spark, f"{root}/segs")
+        segs = f"{root}/segs"
         suspects = _bloom_suspect_segments(
             spark, segs, delta_ids, "vec_id", delta_range=(d["lo"], d["hi"])
         )
@@ -2755,17 +2676,16 @@ def foreach_batch_ivf_pq_maintain_segmented(
         # frozen quantizer tables only — the full 4-table segmented read
         # built two more per-epoch DataFrames (lists/codes unions with
         # their footer jobs) this sink never used
-        idx_root = _store_path(spark, root)
         delta = ivf_pq_index_append(
-            spark.read.parquet(f"{idx_root}/centroids"),
-            spark.read.parquet(f"{idx_root}/codebook"),
+            spark.read.parquet(f"{root}/centroids"),
+            spark.read.parquet(f"{root}/codebook"),
             batch_df,
             m_subspaces=m_subspaces,
             dim=dim,
             id_col=id_col,
             vec_col=vec_col,
         )
-        tmp = f"{root}/__ivfseg_epoch{int(epoch_id)}"
+        tmp = f"{_staged_dir(root)}/segs/seg_{int(epoch_id)}"
         delta["lists"].write.mode("overwrite").parquet(f"{tmp}/lists")
         delta["codes"].write.mode("overwrite").parquet(f"{tmp}/codes")
         # lists rows == batch rows, so the delta aggregate above already
@@ -2776,12 +2696,7 @@ def foreach_batch_ivf_pq_maintain_segmented(
             tmp,
             stats=(n_delta, d["lo"], d["hi"]),
         )
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            compact_ivf_pq_segments(spark, index_dir, tiered=True)
+        _commit_segment(spark, root, epoch_id, compact_every, compact_ivf_pq_segments)
 
     return _sink
 
@@ -2792,27 +2707,22 @@ def compact_ivf_pq_segments(
     """Segment compaction for the IVF-PQ store (VERDICT r8 next-round #2
     — `compact_bm25_segments` generalized): merge the live segments'
     (lists, codes) with the id bitmap rebuilt from the merged lists,
-    under the shared marker-then-manifest protocol (all-merge or
-    size-tiered). The frozen quantizer tables at the index root never
-    move — compaction touches only the per-vector tables, and serve is
+    under the shared one-commit protocol (full merge or size-tiered).
+    The frozen quantizer tables at the index root never move —
+    compaction touches only the per-vector tables, and serve is
     bit-identical before/after (lists/codes rows are a set union; probes
     rank against the same centroids)."""
     root = index_dir.rstrip("/")
-    segs = f"{root}/segs"
 
-    def write_merged(tmp: str, names: list[str], out_name: str) -> None:
-        lists = _read_segment_table(spark, segs, "lists", names)
-        codes = _read_segment_table(spark, segs, "codes", names)
-        lists.write.mode("overwrite").parquet(f"{tmp}/{out_name}/lists")
-        codes.write.mode("overwrite").parquet(f"{tmp}/{out_name}/codes")
-        _write_segment_bloom(
-            spark.read.parquet(f"{tmp}/{out_name}/lists"),
-            "vec_id",
-            f"{tmp}/{out_name}",
-        )
+    def write_merged(out: str, seg_paths: list[str]) -> None:
+        for t in ("lists", "codes"):
+            _read_segment_table(spark, seg_paths, t).write.mode(
+                "overwrite"
+            ).parquet(f"{out}/{t}")
+        _write_segment_bloom(spark.read.parquet(f"{out}/lists"), "vec_id", out)
 
     merged = _compact_segment_store(spark, root, write_merged, tiered=tiered)
-    _refresh_segment_summary(spark, segs, "lists", "vec_id")
+    _refresh_segment_summary(spark, f"{root}/segs", "lists", "vec_id")
     return merged
 
 
@@ -2844,10 +2754,9 @@ def ivf_pq_index_retrain(
     `read_ivf_pq_index_segmented` resolves and the next maintain epoch
     or retrain restores.
 
-    The compaction marker carries forward max(old marker, max live
-    segment epoch) INSIDE the swapped root, so at-least-once replays of
-    pre-retrain epochs stay skipped after their segments are absorbed
-    into the retrained seg_base.
+    The `_ledger` carries forward INSIDE the swapped root, so
+    at-least-once replays of pre-retrain epochs stay skipped after their
+    segments are absorbed into the retrained seg_base.
 
     Cost is a rebuild — O(index), the point of retraining on a CADENCE
     while the O(delta) frozen-quantizer appends absorb every epoch in
@@ -2859,12 +2768,12 @@ def ivf_pq_index_retrain(
 
     root = index_dir.rstrip("/")
     _recover_parked(spark, root)
-    _recover_parked(spark, f"{root}/segs")
-    live = _live_segments(spark, f"{root}/segs")
-    new_mark = max(_compacted_through(spark, root), _max_seg_epoch(live))
-    covers = [e for n in live for e in _segment_covers(spark, f"{root}/segs", n)]
+    _settle_segment_store(spark, root)
+    live = _served_segments(spark, root)
+    covers = [e for p in live for e in _segment_covers(spark, p)]
+    ledger = _last_applied_epoch(spark, root)
     member = (
-        read_ivf_pq_index_segmented(spark, index_dir)["lists"]
+        _read_segment_table(spark, live, "lists")
         .select(F.col("vec_id").alias(id_col))
         .distinct()
     )
@@ -2884,7 +2793,7 @@ def ivf_pq_index_retrain(
         unpersist_with=caches,
     )
     tmp = root + "__retrain"
-    # every table (and the carried-forward marker) materializes at the
+    # every table (and the carried-forward ledger) materializes at the
     # scratch root while the live index is still intact, then ONE
     # install swaps the whole root
     idx["centroids"].write.mode("overwrite").parquet(f"{tmp}/centroids")
@@ -2905,8 +2814,8 @@ def ivf_pq_index_retrain(
         "vec_id",
         ["seg_base"],
     )
-    if new_mark >= 0:
-        _write_text_sidecar(spark, f"{tmp}/compaction_marker", str(int(new_mark)))
+    if ledger >= 0:
+        _write_ledger(spark, tmp, ledger)
     for c in caches:
         c.unpersist()
     _install(spark, tmp, root)
@@ -2926,9 +2835,10 @@ def foreach_batch_join_view_maintain(
     fact stream, V' = V ∪ (ΔA ⋈ B), so each epoch joins ONLY its delta
     against the dimension (broadcast here; bucket-pruned at scale) and
     publishes the result as one immutable segment — per-epoch cost is
-    O(|delta| · join fanout), never a view rescan. Segment protocol as
-    the BM25/IVF-PQ maintainers: single-rename publish, the segment dir
-    IS the ledger (presence == epoch applied), readers union segments
+    O(|delta| · join fanout), never a view rescan. Segment commit as the
+    BM25/IVF-PQ maintainers: the segment and the manifest listing it
+    commit together under the view's `_ledger` (`_commit_segment`),
+    which skips replays; readers union segments
     (`read_join_view_segments`). Dimension updates are out of scope for
     this sink by design — a changing B is the CDC consumer's job
     (foreach_batch_cdc_scd2*), composed upstream; this sink assumes the
@@ -2937,10 +2847,9 @@ def foreach_batch_join_view_maintain(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         root = view_dir.rstrip("/")
-        _recover_parked(spark, f"{root}/segs")  # compaction-crash park
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
-            return  # replay: live segment or compacted away
+        _settle_segment_store(spark, root)
+        if epoch_id <= _last_applied_epoch(spark, root):
+            return  # at-least-once replay of a committed epoch
         if batch_df.isEmpty():
             return
         dim = spark.read.parquet(dim_path).select(dim_key, *dim_cols)
@@ -2949,14 +2858,12 @@ def foreach_batch_join_view_maintain(
         delta_view = batch_df.join(
             F.broadcast(dim), batch_df[fact_key] == dim[dim_key]
         ).drop(dim[dim_key])
-        tmp = f"{root}/__jv_epoch{int(epoch_id)}"
-        delta_view.write.mode("overwrite").parquet(tmp)
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            compact_join_view_segments(spark, view_dir, tiered=True)
+        delta_view.write.mode("overwrite").parquet(
+            f"{_staged_dir(root)}/segs/seg_{int(epoch_id)}"
+        )
+        _commit_segment(
+            spark, root, epoch_id, compact_every, compact_join_view_segments
+        )
 
     return _sink
 
@@ -2992,9 +2899,9 @@ def foreach_batch_join_view_scd2_maintain(
     version space. That identity is this sink's registry oracle
     (streaming_join_view_scd2_maintain).
 
-    Segment protocol identical to foreach_batch_join_view_maintain:
-    single-rename publish, presence + compaction marker as the ledger,
-    optional auto-compaction. The dimension read resolves through
+    Segment commit identical to foreach_batch_join_view_maintain: the
+    segment and its manifest commit under the view's `_ledger`, which
+    skips replays; optional auto-compaction. The dimension read resolves through
     `_store_path` — the SCD2 store swaps WHOLE per epoch, so a CDC
     consumer crash inside its swap window parks it at `__prev` and this
     sink must keep serving from the park (unlike the bucketed store's
@@ -3003,10 +2910,9 @@ def foreach_batch_join_view_scd2_maintain(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         root = view_dir.rstrip("/")
-        _recover_parked(spark, f"{root}/segs")
-        fs, P = _hadoop_fs(spark, root)
-        if _segment_replay_applied(spark, root, epoch_id, fs, P):
-            return  # replay: live segment or compacted away
+        _settle_segment_store(spark, root)
+        if epoch_id <= _last_applied_epoch(spark, root):
+            return  # at-least-once replay of a committed epoch
         if batch_df.isEmpty():
             return
         dim = spark.read.parquet(_store_path(spark, dim_path)).select(
@@ -3024,14 +2930,12 @@ def foreach_batch_join_view_scd2_maintain(
             .withColumnRenamed("valid_from", "dim_valid_from")
             .drop("valid_to")
         )
-        tmp = f"{root}/__jv2_epoch{int(epoch_id)}"
-        delta_view.write.mode("overwrite").parquet(tmp)
-        seg = P(f"{root}/segs/seg_{int(epoch_id)}")
-        fs.mkdirs(seg.getParent())
-        _rename_or_raise(fs, P(tmp), seg)  # publish (invisible until listed)
-        _manifest_add(spark, f"{root}/segs", f"seg_{int(epoch_id)}")
-        if compact_every and len(_live_segments(spark, f"{root}/segs")) >= compact_every:
-            compact_join_view_segments(spark, view_dir, tiered=True)
+        delta_view.write.mode("overwrite").parquet(
+            f"{_staged_dir(root)}/segs/seg_{int(epoch_id)}"
+        )
+        _commit_segment(
+            spark, root, epoch_id, compact_every, compact_join_view_segments
+        )
 
     return _sink
 
@@ -3039,39 +2943,36 @@ def foreach_batch_join_view_scd2_maintain(
 def seed_join_view_segments(view: DataFrame, view_dir: str) -> None:
     """Batch-side backfill of a maintained join view: the standing view
     becomes segment `seg_base`, stamped with the pre-stream epoch -1
-    (`_covers`) like every seeded segment store. No manifest: the view
-    serves by directory glob until its first compaction."""
-    seg = f"{view_dir.rstrip('/')}/segs/seg_base"
-    view.write.mode("overwrite").parquet(seg)
-    _write_covers(view.sparkSession, seg, [-1])
+    (`_covers`) and listed in a fresh one-line manifest like every
+    seeded segment store."""
+    segs = f"{view_dir.rstrip('/')}/segs"
+    view.write.mode("overwrite").parquet(f"{segs}/seg_base")
+    _write_covers(view.sparkSession, f"{segs}/seg_base", [-1])
+    _write_text_sidecar(view.sparkSession, f"{segs}/_manifest", "seg_base")
 
 
 def read_join_view_segments(spark: SparkSession, view_dir: str) -> DataFrame:
     """The maintained join view over the union of live segments (the
-    manifest-listed set when one exists; reads through `_store_path` so
-    a compaction-crash park still serves)."""
-    segs = _store_path(spark, f"{view_dir.rstrip('/')}/segs")
-    return _read_segment_table(spark, segs, None)
+    manifest's list, resolved through the commit journal:
+    `_served_segments`)."""
+    return _read_segment_table(spark, _served_segments(spark, view_dir), None)
 
 
 def compact_join_view_segments(
     spark: SparkSession, view_dir: str, tiered: bool = False
 ) -> int:
     """Segment compaction for the materialized join view (VERDICT r8
-    next-round #2): live segments merge under the shared marker-then-
-    manifest protocol (all-merge or size-tiered). The view has no id
-    tables — its replay gate is the marker + segment presence alone — so
+    next-round #2): live segments merge under the shared one-commit
+    protocol (full merge or size-tiered). The view has no id tables, so
     the merged segment is a plain union rewrite; serve is row-identical
     before and after."""
-    root = view_dir.rstrip("/")
-    segs = f"{root}/segs"
 
-    def write_merged(tmp: str, names: list[str], out_name: str) -> None:
-        _read_segment_table(spark, segs, None, names).write.mode(
+    def write_merged(out: str, seg_paths: list[str]) -> None:
+        _read_segment_table(spark, seg_paths, None).write.mode(
             "overwrite"
-        ).parquet(f"{tmp}/{out_name}")
+        ).parquet(out)
 
-    return _compact_segment_store(spark, root, write_merged, tiered=tiered)
+    return _compact_segment_store(spark, view_dir, write_merged, tiered=tiered)
 
 
 def foreach_batch_dedup_gate(
@@ -3173,16 +3074,28 @@ def foreach_batch_dedup_gate(
     return _sink
 
 
+def _gate_segments(spark: SparkSession, segs_dir: str) -> list[str]:
+    """Paths of every `seg_*` dir under a gate's segment root, listed on
+    the driver. A gate corpus keeps no manifest: the gate's own ledger
+    commits each segment together with its buckets."""
+    fs, P = _hadoop_fs(spark, segs_dir)
+    if not fs.exists(P(segs_dir)):
+        return []
+    return sorted(
+        f"{segs_dir}/{st.getPath().getName()}"
+        for st in fs.listStatus(P(segs_dir))
+        if st.getPath().getName().startswith("seg_")
+    )
+
+
 def _read_gate_segments(spark: SparkSession, segs_dir: str) -> DataFrame:
-    """Every `seg_*` dir under a gate's segment root, listed once on the
-    driver and read by explicit path. A glob read makes Spark probe the
-    literal glob path for a streaming-sink metadata dir, which fails and
-    logs a warning with a stack trace on every serve. A root with no
-    segment yet keeps the glob read, so it fails as it always has."""
-    names = [n for n in _live_segments(spark, segs_dir) if n.startswith("seg_")]
-    if not names:
+    """Every `seg_*` dir under a gate's segment root, read by explicit
+    path (`_read_segment_table`). A root with no segment yet keeps the
+    glob read, so it fails as it always has."""
+    paths = _gate_segments(spark, segs_dir)
+    if not paths:
         return spark.read.parquet(f"{segs_dir}/seg_*")
-    return _read_segment_table(spark, segs_dir, None, names)
+    return _read_segment_table(spark, paths, None)
 
 
 def read_dedup_gate_corpus(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -3213,10 +3126,12 @@ def read_dedup_gate_corpus_at(
     fs, P = _hadoop_fs(spark, acc)
     if not fs.exists(P(acc)):
         raise ValueError(f"dedup gate store {store_dir!r} has no accepted corpus")
-    names = _segments_in_range(spark, acc, _BEFORE_SEED, int(epoch))
-    if not names:
+    segs = _segments_in_range(
+        spark, _gate_segments(spark, acc), _BEFORE_SEED, int(epoch)
+    )
+    if not segs:
         return _read_gate_segments(spark, acc).limit(0)
-    return _read_segment_table(spark, acc, None, names)
+    return _read_segment_table(spark, segs, None)
 
 
 def read_dedup_gate_corpus_diff(
@@ -3237,10 +3152,10 @@ def read_dedup_gate_corpus_diff(
     lo, hi = int(from_epoch), int(to_epoch)
     if hi < lo:
         raise ValueError(f"diff range is backwards: ({lo}, {hi}]")
-    names = _segments_in_range(spark, acc, lo, hi)
-    if not names:
+    segs = _segments_in_range(spark, _gate_segments(spark, acc), lo, hi)
+    if not segs:
         return _read_gate_segments(spark, acc).limit(0)
-    return _read_segment_table(spark, acc, None, names)
+    return _read_segment_table(spark, segs, None)
 
 
 def compact_dedup_gate_corpus(spark: SparkSession, store_dir: str) -> int:
@@ -3251,9 +3166,9 @@ def compact_dedup_gate_corpus(spark: SparkSession, store_dir: str) -> int:
     complete corpus servable). Run from the single maintainer between
     epochs, at the same cadence as the fingerprint-store compaction.
 
-    Replay safety WITHOUT a compaction marker — unlike the index
-    maintainers, a folded epoch's at-least-once redelivery is skipped by
-    the gate's own ledger before it looks at the corpus. The
+    Replay safety needs no compaction marker: a folded epoch's
+    at-least-once redelivery is skipped by the gate's own ledger before
+    it looks at the corpus. The
     corpus AUDIT contract is the catalog: epochs above the fold keep
     exact read_at/diff; epochs inside it raise the horizon error
     (snapshot consumers pin their epoch BEFORE the retention fold, the
@@ -3268,20 +3183,18 @@ def compact_dedup_gate_corpus(spark: SparkSession, store_dir: str) -> int:
     _recover_parked(spark, f"{root}/accepted")
     _epoch_recover(spark, root)
     acc = f"{root}/accepted"
-    fs, P = _hadoop_fs(spark, acc)
-    if not fs.exists(P(acc)):
-        return 0
-    names = _live_segments(spark, acc)
+    names = _gate_segments(spark, acc)
     if len(names) <= 1:
         return 0
-    covered = [e for n in names for e in _segment_covers(spark, acc, n)]
+    covered = [e for p in names for e in _segment_covers(spark, p)]
     top = max(covered)
     out_name = f"seg_m{top}"
     tmp = f"{root}/__compacting_corpus"
+    fs, P = _hadoop_fs(spark, tmp)
     if fs.exists(P(tmp)):
         fs.delete(P(tmp), True)
     (
-        _read_segment_table(spark, acc, None, names)
+        _read_segment_table(spark, names, None)
         .write.mode("overwrite")
         .parquet(f"{tmp}/{out_name}")
     )

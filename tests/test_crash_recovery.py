@@ -279,75 +279,61 @@ def _serve_bm25(spark, idx):
 
 
 @pytest.mark.slow
-def test_compaction_crash_at_every_step_is_recoverable(spark, tmp_path):
-    """ADVICE r8 #1: the segs/ swap inside compaction gets the same
-    exhaustive crash-point treatment as the artifact install. At every
-    prefix of compaction's filesystem ops the invariants hold: (a) serve
-    (read_bm25_index_segmented) answers with the complete pre- or
-    post-compaction index — never raises, never a mixture; (b) a replayed
-    epoch is skipped, not fatal; (c) a fresh maintain epoch applies; and
-    (d) a subsequent compact converges to one segment. Before the fix,
-    the segs-parked state made serve AND every later epoch raise
-    PATH_NOT_FOUND until manual repair."""
-    import shutil as _sh
-
+def test_full_compaction_crash_at_every_fs_op_is_recoverable(
+    spark, tmp_path, monkeypatch
+):
+    """A full merge is one `_epoch_commit` that replaces seg_base in
+    place and removes the segments it absorbed. Killed after every fs op
+    of the compaction (and of its summary refresh), the invariants hold:
+    (a) serve (read_bm25_index_segmented) answers the complete index at
+    that instant — it resolves the commit journal, so the new seg_base is
+    never counted beside its constituents; (b) a replayed epoch is
+    skipped, not fatal; (c) a fresh maintain epoch applies; and (d) a
+    subsequent compact converges to one segment and leaves no park or
+    staged dir behind."""
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         compact_bm25_segments,
+        foreach_batch_bm25_maintain_segmented,
     )
 
-    # reference: the serve every crash state must reproduce (plus seg_5)
-    ref_idx, docs, _ = _seed_segmented_bm25(spark, tmp_path / "ref")
-    want_pre = _serve_bm25(spark, ref_idx)
+    # the pre-compaction store, built once and copied per crash point;
+    # compaction preserves content, so every state must serve `want`
+    template, docs, _ = _seed_segmented_bm25(spark, tmp_path / "ref")
+    want = _serve_bm25(spark, template)
 
-    # compaction's op sequence after the marker install:
-    #   1. write merged seg at __compacting_segs (scratch, invisible)
-    #   2. rename(segs, segs__prev)      } the two-rename swap
-    #   3. rename(__compacting_segs, segs)
-    #   4. delete(segs__prev)
-    for crash_after in range(0, 5):
-        d = tmp_path / f"crash{crash_after}"
-        d.mkdir()
-        idx, docs, sink = _seed_segmented_bm25(spark, d)
-        segs, prev, scratch = (
-            f"{idx}/segs",
-            f"{idx}/segs__prev",
-            f"{idx}/__compacting_segs",
-        )
-        if crash_after >= 1:
-            # run the REAL compaction, then rewind its tail ops to the
-            # crash state — the merged content is the protocol's own, and
-            # the pre-compaction segment set comes from an identically
-            # seeded twin (the build is deterministic)
-            pre_segs = str(tmp_path / f"presegs{crash_after}")
-            _sh.copytree(segs, pre_segs)
-            n = compact_bm25_segments(spark, idx)
-            assert n == 2
-            if crash_after == 1:  # scratch written, swap not started
-                _sh.copytree(segs, scratch)
-                _sh.rmtree(segs)
-                _sh.copytree(pre_segs, segs)
-            elif crash_after == 2:  # segs parked, replacement not in
-                _sh.copytree(segs, scratch)
-                _sh.rmtree(segs)
-                _sh.copytree(pre_segs, prev)
-            elif crash_after == 3:  # replacement in, stale park remains
-                _sh.copytree(pre_segs, prev)
-            # crash_after == 4: completed compaction, nothing to rewind
-        # invariant (a): serve answers the complete index RIGHT NOW
-        assert _serve_bm25(spark, idx) == want_pre, f"crash point {crash_after}"
-        # invariant (b): replay of an applied epoch is skipped, not fatal
+    crash_after = 0
+    while True:
+        idx = str(tmp_path / f"crash{crash_after}")
+        shutil.copytree(template, idx)
+        sink = foreach_batch_bm25_maintain_segmented(idx)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                compact_bm25_segments(spark, idx)
+                completed = True
+            except CrashNow:
+                completed = False
+        # (a) serve answers the complete index RIGHT NOW, before recovery
+        assert _serve_bm25(spark, idx) == want, f"crash point {crash_after}"
+        # (b) replay of an applied epoch is skipped, not fatal
         sink(docs([(3, "streamed data epoch zero")]), 0)
-        assert _serve_bm25(spark, idx) == want_pre
-        # invariant (c): a fresh epoch applies cleanly
+        assert _serve_bm25(spark, idx) == want, f"crash point {crash_after}"
+        # (c) a fresh epoch applies cleanly
         sink(docs([(5, "post crash epoch")]), 5)
         after = _serve_bm25(spark, idx)
-        assert len(after[1]) == len(want_pre[1]) + 1
-        # invariant (d): compaction completes from this state
+        assert len(after[1]) == len(want[1]) + 1
+        # (d) compaction completes from this state
         compact_bm25_segments(spark, idx)
         assert _serve_bm25(spark, idx) == after
-        assert not os.path.exists(prev)
-        assert not os.path.exists(scratch)
-        assert sorted(d for d in os.listdir(f"{idx}/segs") if not d.startswith("_")) == ["seg_base"]
+        assert not os.path.exists(f"{idx}__park")
+        assert not os.path.exists(f"{idx}__staged")
+        segs = sorted(d for d in os.listdir(f"{idx}/segs") if not d.startswith("_"))
+        assert segs == ["seg_base"]
+        if completed:
+            break
+        crash_after += 1
+    # staged manifest, journal, begin, seg_base, manifest, two
+    # constituents, summary, ledger, cleanup, summary refresh
+    assert crash_after >= 12
 
 
 # -------------------- r10: additive bucketed store crash windows (ADVICE r9) --

@@ -1,4 +1,4 @@
-"""The one crash protocol of the hash-bucketed stores, on plain files.
+"""The one crash protocol of the unit stores, on plain files.
 
 `_epoch_commit` is killed after every mutating filesystem op, for every
 unit shape its callers commit; `_epoch_recover`, itself killed after
@@ -102,6 +102,51 @@ _SHAPES = {
         3,
         "_compacted",
     ),
+    # a segment-store epoch: its segment is born and the manifest that
+    # lists it replaced, the segment unit first
+    "segment_epoch": (
+        {
+            "_ledger": "1",
+            "segs/_manifest": "seg_1\nseg_base",
+            "segs/seg_base/part-a": "base",
+            "segs/seg_1/part-a": "s1",
+        },
+        {"segs/seg_2/part-b": "s2", "segs/_manifest": "seg_1\nseg_2\nseg_base"},
+        ["segs/seg_2", "segs/_manifest"],
+        2,
+        "_ledger",
+    ),
+    # a tiered segment compaction: the merged segment is born, the
+    # manifest replaced, two constituents removed
+    "tiered_compaction": (
+        {
+            "_ledger": "3",
+            "segs/_manifest": "seg_2\nseg_3\nseg_base",
+            "segs/seg_base/part-a": "base",
+            "segs/seg_2/part-a": "s2",
+            "segs/seg_3/part-a": "s3",
+        },
+        {"segs/seg_m3/part-b": "m3", "segs/_manifest": "seg_base\nseg_m3"},
+        ["segs/seg_m3", "segs/_manifest", "segs/seg_2", "segs/seg_3"],
+        0,
+        "_compactions",
+    ),
+    # a full segment compaction after a tiered one: seg_base is replaced
+    # in place, the manifest replaced, the constituents removed
+    "full_compaction": (
+        {
+            "_ledger": "4",
+            "_compactions": "0",
+            "segs/_manifest": "seg_4\nseg_base\nseg_m3",
+            "segs/seg_base/part-a": "base",
+            "segs/seg_m3/part-a": "m3",
+            "segs/seg_4/part-a": "s4",
+        },
+        {"segs/seg_base/part-b": "all", "segs/_manifest": "seg_base"},
+        ["segs/seg_base", "segs/_manifest", "segs/seg_m3", "segs/seg_4"],
+        1,
+        "_compactions",
+    ),
 }
 
 
@@ -138,7 +183,7 @@ def _post(store, staged, units, epoch, marker):
     out = {
         rel: text
         for rel, text in store.items()
-        if not any(rel.startswith(u + "/") for u in units)
+        if not any(rel == u or rel.startswith(u + "/") for u in units)
     }
     out.update(staged)
     out[marker] = str(epoch)

@@ -7,15 +7,20 @@ never an error. Single-writer deployments mean an interleaved reader
 sees exactly a crash-prefix state, so the enumeration IS the
 concurrency claim.
 
-Covered surfaces:
+Covered surfaces, each one `_epoch_commit`:
   - segmented store MAINTAIN (foreach_batch_bm25_maintain_segmented):
-    publish rename + manifest commit — reader resolves via manifest;
-  - segmented store COMPACTION (tiered, _compact_segment_store): marker,
-    invisible publish, manifest swap, constituent deletes — content is
+    the segment and the manifest listing it commit under the ledger —
+    the serve resolves the manifest and its segments through the commit
+    journal;
+  - segmented store COMPACTION (tiered, _compact_segment_store): merged
+    segment born, manifest replaced, constituents removed — content is
     preserved, so serve must equal the same index at every prefix;
-  - the park-until-ledger BUCKETED store (weighted-agg): the new
+  - the park-until-ledger BUCKETED store (weighted-agg):
     read_bucketed_store_snapshot resolves mid-epoch windows to the
     complete pre-image via the commit journal + parks.
+
+The segment serves and the bucketed snapshot read share one resolution
+rule (`_snapshot_resolver`).
 
 (The plain `_install` two-rename window already carries a reader
 assertion at every step: test_crash_recovery.py's
@@ -59,10 +64,10 @@ def _serve_bm25(spark, idx):
 
 @pytest.mark.slow
 def test_reader_at_every_fs_op_of_segment_publish(spark, tmp_path, monkeypatch):
-    """An epoch's segment publish (scratch build -> one rename ->
-    manifest commit): at every fs-op prefix the manifest-resolved serve
-    answers the complete PRE index or the complete POST index — a
-    published-but-uncommitted segment dir never leaks into a read."""
+    """An epoch's segment commit (staged segment + manifest, one
+    `_epoch_commit`): at every fs-op prefix the journal-resolved serve
+    answers the complete PRE index or the complete POST index — an
+    installed-but-uncommitted segment dir never leaks into a read."""
     ref = str(tmp_path / "ref")
     seed_bm25_index_segmented(_docs(spark, [(1, "base doc words")]), ref)
     want_pre = _serve_bm25(spark, ref)
@@ -91,14 +96,14 @@ def test_reader_at_every_fs_op_of_segment_publish(spark, tmp_path, monkeypatch):
         if completed:
             break
         crash_after += 1
-    assert crash_after >= 2  # publish rename + manifest commit enumerated
+    assert crash_after >= 8  # staged sidecars, journal, units, ledger, cleanup
 
 
 @pytest.mark.slow
 def test_reader_at_every_fs_op_of_tiered_compaction(spark, tmp_path, monkeypatch):
-    """Tiered compaction preserves content (marker install, invisible
-    merged publish, atomic manifest swap, constituent deletes): the
-    manifest-resolved serve must answer the SAME index at every fs-op
+    """Tiered compaction preserves content (merged segment born,
+    manifest replaced, constituents removed, in one commit): the
+    journal-resolved serve must answer the SAME index at every fs-op
     prefix — compaction is invisible to readers except as layout."""
 
     def seeded(name):
@@ -134,7 +139,7 @@ def test_reader_at_every_fs_op_of_tiered_compaction(spark, tmp_path, monkeypatch
         if completed:
             break
         crash_after += 1
-    assert crash_after >= 3  # marker + publish + manifest swap + deletes
+    assert crash_after >= 10  # journal, four units, ledger, cleanup
 
 
 # ------------------------------------------- park-until-ledger bucketed --

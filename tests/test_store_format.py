@@ -2,9 +2,10 @@
 only the shape the current writers produce. A pre-round-12 parquet-dir
 sidecar, a missing per-segment file, or an empty marker is refused with
 a ValueError naming the file and the fix (re-seed the store) — never
-served through a fallback, and never read as "absent" (an empty
-compaction marker read as -1 would let a merged-away epoch's replay hit
-the disjointness guard and fail the stream).
+served through a fallback, and never read as "absent" (an empty ledger
+read as -1 would let a merged-away epoch's replay hit the disjointness
+guard and fail the stream). Files of the retired segment protocol — a
+store without a `_manifest`, a `compaction_marker` — are refused too.
 """
 
 from __future__ import annotations
@@ -37,8 +38,8 @@ def _docs(spark, rows):
 @pytest.fixture(scope="module")
 def stores(spark, tmp_path_factory):
     """A BM25 segment store (seed, one epoch, full merge, one more epoch:
-    merged seg_base with `_covers`, compaction marker, manifest, summary
-    with `_smeta`), a relation store (one epoch, compacted: `_ledger`
+    merged seg_base with `_covers`, `_ledger`, manifest, summary with
+    `_smeta`), a relation store (one epoch, compacted: `_ledger`
     and `_compacted`) and a seeded bucketed upsert store, each built once
     and copied per case."""
     base = tmp_path_factory.mktemp("formats")
@@ -87,7 +88,7 @@ def _bm25_epoch(spark, root, doc_id):
 _ACTIONS = {
     "serve": lambda spark, root: read_bm25_index_segmented(spark, root)[2].collect(),
     "serve_at": lambda spark, root: read_bm25_index_segmented_at(spark, root, 1),
-    # id 9 is past every segment's id range: only the marker and the
+    # id 9 is past every segment's id range: only the ledger and the
     # bitmaps' presence are consulted
     "epoch": lambda spark, root: _bm25_epoch(spark, root, 9),
     # id 2 falls inside seg_base's range: the summary tier reads `_smeta`
@@ -110,13 +111,13 @@ _CASES = {
     "inflight_parquet": (
         "relation", "__relprev/_inflight", "parquet", "relation_compact"
     ),
-    "compaction_marker_parquet": ("bm25", "compaction_marker", "parquet", "epoch"),
+    "bm25_ledger_parquet": ("bm25", "_ledger", "parquet", "epoch"),
     "compacted_parquet": ("relation", "_compacted", "parquet", "relation_serve"),
     "idbloom_missing": ("bm25", "segs/seg_base/idbloom", "missing", "epoch"),
     "stats_missing": ("bm25", "segs/seg_1/_stats", "missing", "serve"),
     "smeta_missing": ("bm25", "segs/_summary/_smeta", "missing", "epoch_in_range"),
     "merged_covers_missing": ("bm25", "segs/seg_base/_covers", "missing", "serve_at"),
-    "compaction_marker_empty": ("bm25", "compaction_marker", "empty", "epoch"),
+    "bm25_ledger_empty": ("bm25", "_ledger", "empty", "epoch"),
     "compacted_empty": ("relation", "_compacted", "empty", "relation_serve"),
     "stats_empty": ("bm25", "segs/seg_base/_stats", "empty", "serve"),
     "smeta_empty": ("bm25", "segs/_summary/_smeta", "empty", "epoch_in_range"),
@@ -127,6 +128,11 @@ _CASES = {
     "relcprev_bucket_park": (
         "relation", "__relcprev/bucket=0", "parquet", "relation_compact"
     ),
+    # the retired glob-mode segment store: segment dirs, no manifest
+    "manifest_missing": ("bm25", "segs/_manifest", "missing", "serve"),
+    # the retired segment protocol's replay gate: its merged-away epochs
+    # are not in any ledger, so they would replay
+    "compaction_marker_retired": ("bm25", "compaction_marker", "text", "epoch"),
 }
 
 
@@ -146,7 +152,7 @@ def test_old_or_damaged_store_file_is_refused(spark, stores, tmp_path, case):
     elif shape == "empty":
         open(path, "w").close()
     elif shape == "text":  # the retired rewind record: epoch,bucket,existed
-        os.makedirs(os.path.dirname(path))
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as f:
             f.write("1,0,1\n")
     name = os.path.basename(path)

@@ -360,8 +360,8 @@ def test_bm25_segmented_equals_rebuild_and_replay_skips(spark, tmp_path):
     assert got[0] == sorted(tuple(r) for r in p.collect())
     assert got[1] == sorted(tuple(r) for r in l.collect())
     assert got[2] == [tuple(r) for r in s.collect()]
-    # replay: the segment dir is the ledger — re-delivery is a no-op
-    # (without the presence probe the disjointness guard would raise)
+    # replay: the ledger gates re-delivery — a no-op (without the gate
+    # the disjointness guard would raise)
     sink(b, 0)
     assert serve_snap() == got
 
@@ -547,7 +547,7 @@ def test_ivf_pq_segmented_maintain_matches_batch_append(spark, tmp_path):
         .collect()
     )
     assert got == want
-    # replay: segment presence gates re-application (the append's
+    # replay: the ledger gates re-application (the append's
     # disjointness guard would otherwise raise)
     sink(new, 0)
     stored2 = read_ivf_pq_index_segmented(spark, idx)
@@ -615,12 +615,59 @@ def test_join_view_maintain_equals_recompute_and_replays(spark, tmp_path):
         .collect()
     )
     assert got == [(10, 1, "a"), (11, 2, "b"), (12, 3, "c"), (13, 1, "a")]
-    # replay of epoch 0 is skipped by segment presence
+    # replay of epoch 0 is skipped by the ledger
     sink(facts([(11, 2), (12, 3)]), 0)
     assert len(read_join_view_segments(spark, view_dir).collect()) == 4
     # empty epoch publishes nothing
     sink(facts([]).limit(0), 2)
     assert not os.path.exists(f"{view_dir}/segs/seg_2")
+
+
+def _scan_roots(df):
+    """The root paths of every file scan in `df`'s optimized plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        paths = leaves.apply(i).relation().location().rootPaths()
+        roots += [paths.apply(j).toString() for j in range(paths.size())]
+    return sorted(r.removeprefix("file:") for r in roots)
+
+
+def test_segment_stores_list_a_manifest_and_serve_explicit_paths(spark, tmp_path):
+    """A BM25 store grown maintainer-first and a seeded join view each
+    hold `segs/_manifest` after their first epoch, and their serves scan
+    the listed segments by explicit path. A glob root would make Spark
+    probe it for a streaming-sink metadata dir, which fails and logs a
+    stack trace on every serve."""
+    from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
+        foreach_batch_bm25_maintain_segmented,
+        foreach_batch_join_view_maintain,
+        read_bm25_index_segmented,
+        read_join_view_segments,
+        seed_join_view_segments,
+    )
+
+    idx = str(tmp_path / "idx")
+    foreach_batch_bm25_maintain_segmented(idx)(_docs(spark, [(1, "first doc")]), 0)
+    assert os.path.isfile(f"{idx}/segs/_manifest")
+    postings, doclens, _ = read_bm25_index_segmented(spark, idx)
+
+    dim_path = str(tmp_path / "dim")
+    spark.createDataFrame([(1, "a")], "k long, attr string").write.parquet(dim_path)
+    view = str(tmp_path / "view")
+    seed_join_view_segments(
+        spark.createDataFrame([(10, 1, "a")], "fid long, k long, attr string"), view
+    )
+    foreach_batch_join_view_maintain(
+        view, dim_path, fact_key="k", dim_key="k", dim_cols=["attr"]
+    )(spark.createDataFrame([(11, 1)], "fid long, k long"), 0)
+    assert os.path.isfile(f"{view}/segs/_manifest")
+
+    assert _scan_roots(postings) == [f"{idx}/segs/seg_0/postings"]
+    assert _scan_roots(doclens) == [f"{idx}/segs/seg_0/doclens"]
+    roots = _scan_roots(read_join_view_segments(spark, view))
+    assert roots == [f"{view}/segs/seg_0", f"{view}/segs/seg_base"]
+    assert not any("*" in r for r in roots)
 
 
 # --------------------------------------- r9: compaction + bloom probe --
@@ -630,7 +677,7 @@ def test_join_view_maintain_equals_recompute_and_replays(spark, tmp_path):
 def test_replay_after_bm25_compaction_is_skipped_not_fatal(spark, tmp_path):
     """ADVICE r8 #3: compaction merges seg_N away; an at-least-once replay
     of epoch N (sink done, checkpoint commit lost, then compaction ran)
-    must be SKIPPED by the max-compacted-epoch marker — before the fix the
+    must be SKIPPED by the store's ledger — before the fix the
     disjointness guard raised on every retry, permanently failing the
     stream on an epoch that was already applied."""
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
@@ -656,7 +703,7 @@ def test_replay_after_bm25_compaction_is_skipped_not_fatal(spark, tmp_path):
         )
 
     before = serve()
-    sink(b, 0)  # replay of a merged-away epoch: marker skips it
+    sink(b, 0)  # replay of a merged-away epoch: the ledger skips it
     sink(_docs(spark, [(3, "epoch one doc")]), 1)
     assert serve() == before
     # genuinely new epochs still apply after compaction
@@ -734,7 +781,7 @@ def test_join_view_compaction_and_replay_skip(spark, tmp_path):
     assert compact_join_view_segments(spark, view_dir) == 1
     assert snap() == pre
     assert [d for d in os.listdir(f"{view_dir}/segs") if not d.startswith("_")] == ["seg_base"]
-    sink(b0, 0)  # merged-away replay: marker skips (no duplicate rows)
+    sink(b0, 0)  # merged-away replay: the ledger skips (no duplicate rows)
     assert snap() == pre
     sink(facts([(13, 2)]), 2)
     assert len(snap()) == len(pre) + 1
@@ -909,7 +956,7 @@ def test_ivf_pq_retrain_recovers_recall_and_preserves_membership(spark, tmp_path
     streams in through the frozen quantizer, retraining on the current
     corpus must (a) keep the index membership identical, (b) not lose
     recall on shifted queries (strictly improves on this fixture), and
-    (c) keep skipping replays of pre-retrain epochs (the marker carries
+    (c) keep skipping replays of pre-retrain epochs (the ledger carries
     forward through the root swap)."""
     from s3_to_redshift_with_airflow_spark.operators.clustering import (
         ivf_pq_index_search,
@@ -961,7 +1008,7 @@ def test_ivf_pq_retrain_recovers_recall_and_preserves_membership(spark, tmp_path
     assert members() == before_members  # membership preserved exactly
     assert recall_hits() >= frozen_hits  # recall never lost
     assert [d for d in os.listdir(f"{idx}/segs") if not d.startswith("_")] == ["seg_base"]  # segments absorbed
-    # (c) pre-retrain epoch replay: skipped by the carried-forward marker
+    # (c) pre-retrain epoch replay: skipped by the carried-forward ledger
     pre = members()
     sink(shifted, 0)
     assert members() == pre
@@ -1060,7 +1107,7 @@ def test_join_view_scd2_asof_interleaved_equals_recompute(spark, tmp_path):
         .collect()
     )
     assert got == [(10, 1, "a"), (11, 2, "b"), (12, 1, "a"), (13, 1, "a2")]
-    # replay of epoch 1 is skipped (segment presence)
+    # replay of epoch 1 is skipped (the ledger)
     sink(facts([(12, 1, "2023-12-31"), (13, 1, "2024-02-01")]), 1)
     assert read_join_view_segments(spark, view_dir).count() == 4
 
@@ -1120,7 +1167,6 @@ def test_tiered_merge_never_rewrites_the_giant_base(spark, tmp_path):
     serve equals a monolithic rebuild."""
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
         _live_segments,
-        _manifest_segments,
         compact_bm25_segments,
         foreach_batch_bm25_maintain_segmented,
         seed_bm25_index_segmented,
@@ -1141,7 +1187,7 @@ def test_tiered_merge_never_rewrites_the_giant_base(spark, tmp_path):
     base_files = sorted(os.listdir(f"{idx}/segs/seg_base/postings"))
     base_mtime = os.path.getmtime(f"{idx}/segs/seg_base/postings")
     assert compact_bm25_segments(spark, idx, tiered=True) == 1  # 2 smalls -> 1
-    assert _manifest_segments(spark, f"{idx}/segs") == ["seg_base", "seg_m1"]
+    assert _live_segments(spark, f"{idx}/segs") == ["seg_base", "seg_m1"]
     assert sorted(os.listdir(f"{idx}/segs/seg_base/postings")) == base_files
     assert os.path.getmtime(f"{idx}/segs/seg_base/postings") == base_mtime
     assert not os.path.exists(f"{idx}/segs/seg_0")  # constituents retired
@@ -1150,28 +1196,29 @@ def test_tiered_merge_never_rewrites_the_giant_base(spark, tmp_path):
     bp, bl, _ = bm25_index_build(mk(0, 3020))
     assert p == sorted(tuple(r) for r in bp.collect())
     assert l == sorted(tuple(r) for r in bl.collect())
-    # replay of a merged-away epoch: skipped via the marker, not fatal
+    # replay of a merged-away epoch: skipped via the ledger, not fatal
     sink(mk(3000, 3010), 0)
     assert _serve_bm25_pl(spark, idx) == (p, l)
     # a later epoch + another tiered pass merges the mid with the new small
     sink(mk(3020, 3030), 2)
     assert compact_bm25_segments(spark, idx, tiered=True) == 1
-    assert _manifest_segments(spark, f"{idx}/segs") == ["seg_base", "seg_m2"]
-    assert len(_live_segments(spark, f"{idx}/segs")) == 2
+    assert _live_segments(spark, f"{idx}/segs") == ["seg_base", "seg_m2"]
 
 
 @pytest.mark.slow
-def test_partial_merge_crash_windows_never_double_count(spark, tmp_path):
-    """The manifest is what makes PARTIAL merges crash-safe: at every
-    crash point of the partial path — merged segment published but not
-    yet listed; manifest swapped but constituents not yet deleted — the
-    serve is row-identical to the pre-compaction serve (never a mixture,
-    never a double count), replays stay gated, and the next compact
-    converges."""
-    import shutil as _sh
+def test_tiered_compaction_crash_at_every_fs_op_never_double_counts(
+    spark, tmp_path, monkeypatch
+):
+    """A tiered merge is one `_epoch_commit`: the merged seg_m born, the
+    manifest replaced, the constituents removed. Killed after every fs
+    op, the serve is row-identical to the pre-compaction serve — the
+    merged segment and its constituents are never served together — a
+    replay of a merged-away epoch stays gated, and the re-run compaction
+    converges to seg_base + one seg_m with the base untouched."""
+    import shutil
 
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
-        _manifest_segments,
+        _live_segments,
         compact_bm25_segments,
         foreach_batch_bm25_maintain_segmented,
         seed_bm25_index_segmented,
@@ -1181,75 +1228,108 @@ def test_partial_merge_crash_windows_never_double_count(spark, tmp_path):
         F.col("id").alias("doc_id"),
         F.concat(F.lit("body token "), (F.col("id") % 53).cast("string")).alias("text"),
     )
+    template = str(tmp_path / "ref")
+    seed_bm25_index_segmented(mk(0, 3000), template)
+    sink = foreach_batch_bm25_maintain_segmented(template)
+    sink(mk(3000, 3010), 0)
+    sink(mk(3010, 3020), 1)
+    want = _serve_bm25_pl(spark, template)
+    base_files = sorted(os.listdir(f"{template}/segs/seg_base/postings"))
 
-    def build(d):
-        idx = str(d / "segidx")
-        seed_bm25_index_segmented(mk(0, 3000), idx)
+    crash_after = 0
+    while True:
+        idx = str(tmp_path / f"crash{crash_after}")
+        shutil.copytree(template, idx)
         sink = foreach_batch_bm25_maintain_segmented(idx)
-        sink(mk(3000, 3010), 0)
-        sink(mk(3010, 3020), 1)
-        return idx, sink
-
-    ref_idx, _ = build(tmp_path / "ref")
-    want = _serve_bm25_pl(spark, ref_idx)
-
-    # crash A: merged seg_m1 dir published, manifest NOT swapped
-    idx, sink = build(tmp_path / "crashA")
-    assert compact_bm25_segments(spark, idx, tiered=True) == 1
-    # rewind: restore old manifest + constituents, keep the orphan seg_m1
-    _sh.copytree(f"{ref_idx}/segs/seg_0".replace(ref_idx, ref_idx), f"{idx}/segs/seg_0")
-    _sh.copytree(f"{ref_idx}/segs/seg_1", f"{idx}/segs/seg_1")
-    from s3_to_redshift_with_airflow_spark.streaming.pipeline import _write_manifest
-
-    _write_manifest(spark, f"{idx}/segs", ["seg_0", "seg_1", "seg_base"])
-    assert _serve_bm25_pl(spark, idx) == want  # orphan seg_m1 NOT served
-    sink(mk(3000, 3010), 0)  # replay: still gated (marker)
-    assert _serve_bm25_pl(spark, idx) == want
-    assert compact_bm25_segments(spark, idx, tiered=True) == 1  # converges
-    assert _serve_bm25_pl(spark, idx) == want
-    # the orphan seg_m1 was GC'd at the retry's start, freeing its name
-    assert _manifest_segments(spark, f"{idx}/segs") == ["seg_base", "seg_m1"]
-
-    # crash B: manifest swapped, constituents NOT deleted (orphans live)
-    idx, sink = build(tmp_path / "crashB")
-    assert compact_bm25_segments(spark, idx, tiered=True) == 1
-    _sh.copytree(f"{ref_idx}/segs/seg_0", f"{idx}/segs/seg_0")  # orphan
-    _sh.copytree(f"{ref_idx}/segs/seg_1", f"{idx}/segs/seg_1")  # orphan
-    assert _serve_bm25_pl(spark, idx) == want  # orphans NOT double-served
-    sink(mk(3000, 3010), 0)  # replay of merged-away epoch: marker gates it
-    assert _serve_bm25_pl(spark, idx) == want
-    compact_bm25_segments(spark, idx, tiered=True)  # GC pass
-    assert not os.path.exists(f"{idx}/segs/seg_0")
-    assert not os.path.exists(f"{idx}/segs/seg_1")
-    assert _serve_bm25_pl(spark, idx) == want
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                compact_bm25_segments(spark, idx, tiered=True)
+                completed = True
+            except CrashNow:
+                completed = False
+        assert _serve_bm25_pl(spark, idx) == want, f"crash point {crash_after}"
+        sink(mk(3000, 3010), 0)  # replay of a merged-away epoch: gated
+        assert _serve_bm25_pl(spark, idx) == want, f"crash point {crash_after}"
+        compact_bm25_segments(spark, idx, tiered=True)  # converges
+        assert _live_segments(spark, f"{idx}/segs") == ["seg_base", "seg_m1"]
+        assert sorted(os.listdir(f"{idx}/segs/seg_base/postings")) == base_files
+        assert not os.path.exists(f"{idx}/segs/seg_0")
+        assert _serve_bm25_pl(spark, idx) == want
+        if completed:
+            break
+        crash_after += 1
+    # staged manifest, journal, begin, four units, ledger, cleanup
+    assert crash_after >= 10
 
 
 @pytest.mark.slow
-def test_publish_crash_before_manifest_commit_is_repaired_by_replay(
-    spark, tmp_path
+def test_join_view_epoch_crash_at_every_fs_op_lands_once_on_replay(
+    spark, tmp_path, monkeypatch
 ):
-    """A crash between segment publish and manifest commit leaves a
-    complete-but-invisible segment; the at-least-once re-delivery of the
-    same epoch repairs the manifest instead of re-writing (or worse,
-    raising on) the already-published segment."""
+    """An epoch's segment and the manifest listing it commit together:
+    killed after every fs op of a join-view epoch (on a store grown
+    maintainer-first, whose manifest came from its first epoch), the
+    serve answers the complete pre- or post-epoch view, and the
+    at-least-once re-delivery lands the epoch exactly once — a segment
+    installed but not committed is rewound, never served beside its
+    replay — while an older replay stays skipped and a fresh epoch
+    applies."""
+    import shutil
+
     from s3_to_redshift_with_airflow_spark.streaming.pipeline import (
-        _manifest_segments,
-        _write_manifest,
-        foreach_batch_bm25_maintain_segmented,
-        seed_bm25_index_segmented,
+        _live_segments,
+        foreach_batch_join_view_maintain,
+        read_join_view_segments,
     )
 
-    idx = str(tmp_path / "segidx")
-    seed_bm25_index_segmented(_docs(spark, [(1, "base doc")]), idx)
-    sink = foreach_batch_bm25_maintain_segmented(idx)
-    sink(_docs(spark, [(2, "epoch zero doc")]), 0)
-    full = _serve_bm25_pl(spark, idx)
-    # simulate the crash: the segment dir stays, the manifest forgets it
-    _write_manifest(spark, f"{idx}/segs", ["seg_base"])
-    assert _serve_bm25_pl(spark, idx) != full  # invisible, as a reader must see
-    sink(_docs(spark, [(2, "epoch zero doc")]), 0)  # re-delivery repairs
-    assert _manifest_segments(spark, f"{idx}/segs") == ["seg_0", "seg_base"]
-    assert _serve_bm25_pl(spark, idx) == full
+    dim_path = str(tmp_path / "dim")
+    spark.createDataFrame(
+        [(1, "a"), (2, "b")], "k long, attr string"
+    ).write.parquet(dim_path)
+    facts = lambda rows: spark.createDataFrame(rows, "fid long, k long")  # noqa: E731
+
+    def maintain(view_dir):
+        return foreach_batch_join_view_maintain(
+            view_dir, dim_path, fact_key="k", dim_key="k", dim_cols=["attr"]
+        )
+
+    def snap(view_dir):
+        return sorted(
+            tuple(r)
+            for r in read_join_view_segments(spark, view_dir)
+            .select("fid", "k", "attr")
+            .collect()
+        )
+
+    template = str(tmp_path / "ref")
+    maintain(template)(facts([(10, 1)]), 0)
+    want_pre = snap(template)
+    want_post = want_pre + [(11, 2, "b")]
+
+    crash_after = 0
+    while True:
+        view = str(tmp_path / f"crash{crash_after}")
+        shutil.copytree(template, view)
+        sink = maintain(view)
+        with patch_crashing(monkeypatch, [crash_after]):
+            try:
+                sink(facts([(11, 2)]), 1)
+                completed = True
+            except CrashNow:
+                completed = False
+        assert snap(view) in (want_pre, want_post), f"crash point {crash_after}"
+        sink(facts([(11, 2)]), 1)  # re-delivery lands it exactly once
+        assert snap(view) == want_post, f"crash point {crash_after}"
+        sink(facts([(10, 1)]), 0)  # an older replay stays skipped
+        assert snap(view) == want_post
+        sink(facts([(12, 1)]), 2)  # a fresh epoch applies
+        assert snap(view) == want_post + [(12, 1, "a")]
+        assert _live_segments(spark, f"{view}/segs") == ["seg_0", "seg_1", "seg_2"]
+        if completed:
+            break
+        crash_after += 1
+    # staged manifest, journal, begin, segment, manifest, ledger, cleanup
+    assert crash_after >= 8
 
 
 # ------------------------------- r10: store-wide summary bloom (tier 1.5) --
